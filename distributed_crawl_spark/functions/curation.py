@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import doc_shingles, md5_int48, shingles, tokens
+from .dedup import (LOCAL_ROWS, doc_shingles, md5_int48, rows_if_small,
+                    shingles, tokens)
 from .textstats import char_count, quality_score_int, word_count
 
 SPLIT_BUCKETS = 10_000
@@ -773,14 +774,6 @@ def _winnow_anchor_rows(docs: DataFrame, k: int, s: int, id_col: str,
     ).mapInPandas(_anchors, f"__doc {id_t}, __pos int, __dig string")
 
 
-# Anchor-row count under which the census/extend/merge tail of
-# substring_spans runs in ONE task (the near_dup_components /
-# LOCAL_GRAPH_EDGES data-size dispatch — anchor rows bound the
-# occurrence table, the pair count and the involved-doc set). Pass
-# local_threshold=0 to force the distributed plan.
-LOCAL_ANCHOR_ROWS = 2_000_000
-
-
 def _local_substring_tail(u: DataFrame, w: int, k: int, min_docs: int,
                           max_df: int | None, id_col: str,
                           id_t: str) -> DataFrame:
@@ -864,7 +857,10 @@ def _local_substring_tail(u: DataFrame, w: int, k: int, min_docs: int,
             od.append(d), ob.append(cb), ol.append(ce - cb)
         yield pd.DataFrame({id_col: od, "begin": ob, "length": ol})
 
-    return u.coalesce(1).mapInPandas(
+    # repartition, not coalesce: the shuffle boundary keeps the
+    # semi-joined corpus scan feeding ``u`` parallel instead of folding
+    # it into the single kernel task
+    return u.repartition(1).mapInPandas(
         _kern, f"{id_col} {id_t}, begin int, length int"
     )
 
@@ -873,7 +869,7 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
                     min_docs: int = 2, id_col: str = "doc_id",
                     text_col: str = "text",
                     max_df: int | None = None,
-                    local_threshold: int = LOCAL_ANCHOR_ROWS) -> DataFrame:
+                    local_threshold: int = LOCAL_ROWS) -> DataFrame:
     """Arbitrary-offset exact-substring duplicate detection (the
     Lee et al. 2022 / RefinedWeb repeated-span pass): find every token
     range that is part of a span of ``>= w`` tokens repeated verbatim
@@ -930,36 +926,35 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
     # reference (and the pytest oracle pins both to the same spans).
     anchors = _winnow_anchor_rows(docs, k, s, id_col, text_col)
     # small-anchor-stream fast path (same dispatch as the graph/pair
-    # families): checkpoint the slim anchor rows (one kernel pass —
-    # the distributed plan below would run the kernel twice, census +
-    # occurrence join), then run the whole census/extend/merge tail in
-    # one task over the anchors plus the involved docs' text (fetched
-    # with one slim semi-joined corpus scan)
-    if local_threshold:
-        anchors = anchors.localCheckpoint()
-        if anchors.count() <= local_threshold:
-            involved = anchors.select("__doc").distinct()
-            dtx = (
-                docs.select(
-                    F.col(id_col).alias("__doc"),
-                    F.col(text_col).alias("__txt"),
-                )
-                .join(involved, "__doc", "left_semi")
+    # families): when the bounded probe holds the whole anchor stream
+    # (anchor rows bound the occurrence table, the pair count and the
+    # involved-doc set), its checkpoint is read once (one kernel pass)
+    # by the census/extend/merge tail in one task, together with the
+    # involved docs' text (fetched with one slim semi-joined corpus scan)
+    small = rows_if_small(anchors, local_threshold)
+    if small is not None:
+        involved = small.select("__doc").distinct()
+        dtx = (
+            docs.select(
+                F.col(id_col).alias("__doc"),
+                F.col(text_col).alias("__txt"),
             )
-            u = anchors.withColumn(
-                "__txt", F.lit(None).cast("string")
-            ).unionByName(
-                dtx.select(
-                    "__doc",
-                    F.lit(None).cast("int").alias("__pos"),
-                    F.lit(None).cast("string").alias("__dig"),
-                    "__txt",
-                )
+            .join(involved, "__doc", "left_semi")
+        )
+        u = small.withColumn(
+            "__txt", F.lit(None).cast("string")
+        ).unionByName(
+            dtx.select(
+                "__doc",
+                F.lit(None).cast("int").alias("__pos"),
+                F.lit(None).cast("string").alias("__dig"),
+                "__txt",
             )
-            id_t = docs.schema[id_col].dataType.simpleString()
-            return _local_substring_tail(
-                u, w, k, min_docs, max_df, id_col, id_t
-            )
+        )
+        id_t = docs.schema[id_col].dataType.simpleString()
+        return _local_substring_tail(
+            u, w, k, min_docs, max_df, id_col, id_t
+        )
     census = anchors.groupBy("__dig").agg(
         F.countDistinct("__doc").alias("__n_docs"),
         F.count(F.lit(1)).alias("__n_occ"),

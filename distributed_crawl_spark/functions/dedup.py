@@ -79,6 +79,28 @@ def _resolve_materializer(materializer, default: str | None):
     return identity
 
 
+# Row count under which a size-dispatched query (the graph iterations,
+# near_dup_components, the substring_spans tail) runs in ONE task — a
+# data-size bound (tens of MB of rows in a single task), not a
+# core-count constant. Pass local_threshold=0 to force the distributed
+# plan.
+LOCAL_ROWS = 2_000_000
+
+
+def rows_if_small(df: DataFrame, bound: int) -> DataFrame | None:
+    """The one size probe behind every single-task fast path: ``df``'s
+    rows, checkpointed, when it holds at most ``bound`` rows; ``None``
+    when it holds more or ``bound`` is 0. Only ``bound + 1`` rows are
+    ever materialized, so a large stream is not written out just to
+    learn that it is large — the caller's distributed branch gets ``df``
+    unmaterialized — and on the small branch the checkpoint IS the
+    kernel input, so the upstream plan runs once."""
+    if not bound:
+        return None
+    small = df.limit(bound + 1).localCheckpoint()
+    return small if small.count() <= bound else None
+
+
 def md5_int48(col: Column) -> Column:
     """Portable 48-bit integer hash: first 12 hex chars of md5.
 
@@ -89,9 +111,8 @@ def md5_int48(col: Column) -> Column:
 
 
 # (id, shingle) row count under which the whole posting/pair-count
-# stage runs in ONE task (same data-size dispatch as
-# near_dup_components / graph.LOCAL_GRAPH_EDGES): a few hundred MB of
-# rows in a single pandas task, not a core-count constant. Pass
+# stage runs in ONE task (the rows_if_small dispatch): a few hundred MB
+# of rows in a single pandas task, not a core-count constant. Pass
 # local_threshold=0 to force the distributed posting-list plan.
 LOCAL_POSTING_ROWS = 4_000_000
 
@@ -374,12 +395,11 @@ def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
     materializer = _resolve_materializer(materializer, default="persist")
     ds = doc_shingles(docs, id_col, text_col, n)
     # small-corpus fast path: the whole census/filter/pair stage in one
-    # task (the materializer is moot there — a single pass reads the
-    # checkpointed shingle rows once)
-    if local_threshold:
-        ds = ds.localCheckpoint()
-        if ds.count() <= local_threshold:
-            return _local_pair_counts(ds, id_col, max_df)
+    # task over the probe's checkpointed shingle rows (the materializer
+    # is moot there — a single pass reads them once)
+    small = rows_if_small(ds, local_threshold)
+    if small is not None:
+        return _local_pair_counts(small, id_col, max_df)
     if max_df is not None:
         # census first (count-only partial agg — safe on the Zipf head),
         # then filter the index via the rare-shingle join; both sides
@@ -760,7 +780,7 @@ def _local_components(edges: DataFrame) -> DataFrame:
 def near_dup_components(pairs: DataFrame, id_a: str = "id_a",
                         id_b: str = "id_b",
                         max_iters: int = 25,
-                        local_threshold: int = 2_000_000) -> DataFrame:
+                        local_threshold: int = LOCAL_ROWS) -> DataFrame:
     """Connected components over a near-dup pair list: every document in
     a transitively-connected duplicate cluster gets the cluster's MINIMUM
     doc id as its ``component_id`` — the canonical-pick step that turns
@@ -801,14 +821,15 @@ def near_dup_components(pairs: DataFrame, id_a: str = "id_a",
         .distinct()
         .localCheckpoint()
     )
-    # Size-adaptive dispatch (the count is a cheap scan of the already-
-    # checkpointed edge RDD): small graphs take the single-task
+    # Size-adaptive dispatch: small graphs take the single-task
     # union-find (identical output, none of the per-round job latency);
     # graphs past ``local_threshold`` edges keep the iterative scale
-    # path below. The threshold is a data-size bound (~tens of MB of
-    # edge rows in one task), not a core-count constant.
-    if local_threshold and edges.count() <= local_threshold:
-        return _local_components(edges)
+    # path below. The edge list is checkpointed BEFORE the probe because
+    # every iteration re-reads it and rebuilding it costs the distinct
+    # shuffle; the bounded probe then scans that checkpoint.
+    small = rows_if_small(edges, local_threshold)
+    if small is not None:
+        return _local_components(small)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()

@@ -22,14 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RANK_UNIT = 1_000_000  # 1.0 in micro-units
+from .dedup import LOCAL_ROWS, rows_if_small
 
-# Edge count under which an iterative graph query runs its whole
-# iteration sequence in ONE task instead of paying per-round job
-# latency — a data-size bound (tens of MB of edge rows in a single
-# task), not a core-count constant; the same hybrid dispatch as
-# dedup.near_dup_components. Pass 0 to force the iterative scale path.
-LOCAL_GRAPH_EDGES = 2_000_000
+RANK_UNIT = 1_000_000  # 1.0 in micro-units
 
 
 def _edge_indices(it):
@@ -198,7 +193,7 @@ def _local_communities(e: DataFrame, iters: int) -> DataFrame:
 
 def host_rank(edges: DataFrame, iters: int = 5, damping_x1000: int = 850,
               src_col: str = "src", dst_col: str = "dst",
-              local_threshold: int = LOCAL_GRAPH_EDGES) -> DataFrame:
+              local_threshold: int = LOCAL_ROWS) -> DataFrame:
     """PageRank over a host multigraph, quantized to integer micro-units.
 
     Update per iteration (all integer ops)::
@@ -226,9 +221,9 @@ def host_rank(edges: DataFrame, iters: int = 5, damping_x1000: int = 850,
     re-reads them). Overflow bound: sum(contrib) ≤ |hosts| · RANK_UNIT,
     so the 850× product stays in int64 up to ~10^13 hosts.
 
-    Small graphs (edge list under ``local_threshold`` rows — the same
-    data-size dispatch as dedup.near_dup_components) skip the iterative
-    loop entirely: the checkpointed edge list runs the identical
+    Small graphs (edge list of at most ``local_threshold`` rows, found
+    by the bounded probe :func:`dedup.rows_if_small`) skip the iterative
+    loop entirely: the probe's checkpointed edge rows run the identical
     integer update in ONE task (:func:`_local_rank`), trading
     ``3·iters`` fixed-latency shuffle stages for one numpy pass.
     ``local_threshold=0`` forces the scale path.
@@ -238,10 +233,9 @@ def host_rank(edges: DataFrame, iters: int = 5, damping_x1000: int = 850,
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    if local_threshold:
-        e = e.localCheckpoint()  # parallel materialize; cheap count
-        if e.count() <= local_threshold:
-            return _local_rank(e, iters, damping_x1000, "pr_x1e6")
+    small = rows_if_small(e, local_threshold)
+    if small is not None:
+        return _local_rank(small, iters, damping_x1000, "pr_x1e6")
     nodes = (
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
@@ -390,7 +384,7 @@ def _census_topk(pairs: DataFrame, k: int) -> DataFrame:
 
 def hits_scores(edges: DataFrame, iters: int = 2,
                 src_col: str = "src", dst_col: str = "dst",
-                local_threshold: int = LOCAL_GRAPH_EDGES) -> DataFrame:
+                local_threshold: int = LOCAL_ROWS) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over a host multigraph,
     quantized to integer micro-units — the complementary link signal to
     :func:`host_rank`: PageRank finds globally-endorsed hosts; HITS
@@ -420,18 +414,19 @@ def hits_scores(edges: DataFrame, iters: int = 2,
     must stay ≤ ~9.2e6 — true for host graphs (degree = distinct
     neighbor hosts); for denser graphs drop RANK_UNIT a decade.
     """
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    )
+    # small-graph fast path: identical integer iteration in one task
+    # over the bounded probe's edge rows (same dispatch as host_rank)
+    small = rows_if_small(e, local_threshold)
+    if small is not None:
+        return _local_hits(small, iters)
     # localCheckpoint: e/nodes are referenced by every half-step and the
     # scores fold the whole previous iteration into their lineage —
     # without truncation the final plan re-derives the edge projection
     # O(iters^2) times (same per-iteration cut as host_rank).
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
-    # small-graph fast path: identical integer iteration in one task
-    # (same dispatch as host_rank; the edge list is already
-    # checkpointed, so the count is a cheap scan)
-    if local_threshold and e.count() <= local_threshold:
-        return _local_hits(e, iters)
+    e = e.localCheckpoint()
     nodes = e.select(F.col("src").alias("host")).union(
         e.select(F.col("dst").alias("host"))
     ).distinct().localCheckpoint()
@@ -624,7 +619,7 @@ def trust_rank(edges: DataFrame, seeds: "list[str]",
                iters: int = 5, damping_x1000: int = 850,
                src_col: str = "src", dst_col: str = "dst",
                scaled_teleport: bool = False,
-               local_threshold: int = LOCAL_GRAPH_EDGES) -> DataFrame:
+               local_threshold: int = LOCAL_ROWS) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): PageRank
     with the teleport biased onto a hand-vetted TRUSTED seed set, so
     trust flows only along links out of good hosts and decays with
@@ -658,7 +653,7 @@ def trust_rank(edges: DataFrame, seeds: "list[str]",
     cross-measure comparisons (:func:`spam_mass`) need it. int64-safe:
     the scaled unit is ≤ RANK_UNIT·|hosts|, the same bound host_rank's
     overflow analysis already covers. Costs one ``nodes.count()`` on
-    the already-checkpointed node table.
+    the checkpointed node table.
 
     Scale shape: identical to :func:`host_rank` — three host-keyed
     shuffles per iteration, lazy linear plan (ranks referenced once per
@@ -673,12 +668,10 @@ def trust_rank(edges: DataFrame, seeds: "list[str]",
     # small-graph fast path (same dispatch as host_rank); the kernel
     # computes the scaled-teleport factor from the same distinct-host
     # count the DataFrame path would
-    if local_threshold:
-        e = e.localCheckpoint()
-        if e.count() <= local_threshold:
-            return _local_rank(e, iters, damping_x1000, "trust_x1e6",
-                               seeds=seeds,
-                               scaled_teleport=scaled_teleport)
+    small = rows_if_small(e, local_threshold)
+    if small is not None:
+        return _local_rank(small, iters, damping_x1000, "trust_x1e6",
+                           seeds=seeds, scaled_teleport=scaled_teleport)
     nodes = (
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
@@ -830,7 +823,7 @@ def reciprocal_link_rate(edges: DataFrame,
 def label_communities(edges: DataFrame, iters: int = 4,
                       src_col: str = "src",
                       dst_col: str = "dst",
-                      local_threshold: int = LOCAL_GRAPH_EDGES
+                      local_threshold: int = LOCAL_ROWS
                       ) -> DataFrame:
     """Host communities by SYNCHRONOUS label propagation (Raghavan et
     al. 2007) over the undirected simple host graph: every host starts
@@ -867,10 +860,9 @@ def label_communities(edges: DataFrame, iters: int = 4,
     )
     # small-graph fast path (same dispatch as host_rank): the raw edge
     # list crosses once and the kernel dedups/undirects it in-task
-    if local_threshold:
-        e = e.localCheckpoint()
-        if e.count() <= local_threshold:
-            return _local_communities(e, iters)
+    small = rows_if_small(e, local_threshold)
+    if small is not None:
+        return _local_communities(small, iters)
     und = (
         e.filter(F.col("src") != F.col("dst"))
         .select("src", "dst")

@@ -490,13 +490,11 @@ def write_text_index(docs: DataFrame, path: str, id_col: str = "doc_id",
     spark = docs.sparkSession
     # ONE tokenization pass, and a SCALE-ADAPTIVE bucket count (guide
     # §2/§6: derive partitioning from data size, not a constant):
-    # ``n_buckets=None`` persists the posting stream, counts it, and
-    # sizes the partition layout to ~250k rows per bucket (clamped
-    # [4, 64]) — a small index stops paying 64 task/commit/file
-    # overheads (measured: build 3.5→1.8 s first-run at sf0.1), a big
-    # one keeps the full fan-out. Pass an explicit ``n_buckets`` at
-    # corpus scale to skip the posting-stream persist entirely (the
-    # prior written-file derivation shape).
+    # ``n_buckets=None`` sizes the partition layout from the corpus doc
+    # count at ~10k docs per bucket (clamped [4, 64]) — a small index
+    # stops paying 64 task/commit/file overheads (measured: build
+    # 3.5→1.8 s first-run at sf0.1), a big one keeps the full fan-out.
+    # Pass an explicit ``n_buckets`` at corpus scale to skip the count.
     posts = build_postings(docs, id_col=id_col, text_col=text_col,
                            positions=positions)
     if n_buckets is None:

@@ -35,25 +35,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
-import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-_TIMING = bool(os.environ.get("CRAWL_TIMING"))
-
-# Structured CRAWL_TIMING rows ({kind, name, sec}) — the serial-floor
-# profiler (tools/serial_floor.py) aggregates these per round to split a
-# round's wall time into Spark-job work (staged writes), pointer IO, and
-# driver-side residue (plan build / job submit / checkpoint reads).
-TIMINGS: list[dict] = []
-
-
-def record_timing(kind: str, name: str, sec: float) -> None:
-    if _TIMING:
-        TIMINGS.append({"kind": kind, "name": name, "sec": sec})
-        print(f"  [{kind} {name}: {sec:.2f}s]", file=sys.stderr)
 
 
 class Staging:
@@ -80,10 +64,8 @@ class Staging:
 
     def _write(self, name: str, df: DataFrame) -> str:
         path = str(self.vdir / name)
-        t0 = time.monotonic()
         self.store._schemas[name] = df.schema  # read() skips inference
         df.write.mode("overwrite").parquet(path)
-        record_timing("write", name, time.monotonic() - t0)
         return path
 
     def _read_back(self, df: DataFrame, path: str) -> DataFrame:
@@ -110,9 +92,7 @@ class Staging:
         sdir = self.store._scratch_dir(self.version)
         sdir.mkdir(parents=True, exist_ok=True)
         path = str(sdir / name)
-        t0 = time.monotonic()
         df.write.mode("overwrite").parquet(path)
-        record_timing("write", name, time.monotonic() - t0)
         return self._read_back(df, path)
 
     def write_rewrite(self, name: str, df: DataFrame) -> DataFrame:
@@ -141,7 +121,6 @@ class Staging:
         shutil.rmtree(self.store._scratch_dir(self.version), ignore_errors=True)
 
     def finalize(self, meta: dict | None = None) -> int:
-        t0 = time.monotonic()
         pointer = {
             **self.prior_extra,
             "version": self.version,
@@ -158,7 +137,6 @@ class Staging:
         tmp = self.store.root / f".{CheckpointStore.POINTER}.tmp"
         tmp.write_text(body)
         os.replace(tmp, self.store.root / CheckpointStore.POINTER)
-        record_timing("pointer", "finalize", time.monotonic() - t0)
         return self.version
 
 

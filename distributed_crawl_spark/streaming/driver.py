@@ -678,9 +678,6 @@ class CrawlDriver:
                 "metrics_history": history + [stats.__dict__],
             }
         )
-        from .checkpoint import record_timing
-
-        record_timing("round", str(round_no), stats.seconds)
         return stats
 
     # -- recrawl TTL ---------------------------------------------------------------

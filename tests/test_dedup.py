@@ -269,11 +269,15 @@ def test_near_dup_components_matches_union_find(spark):
     for doc, comp in got.items():
         assert comp <= doc
     # r6: both physical paths — single-task union-find (the small-graph
-    # default) and the iterative min-label loop — must agree exactly
-    got_iter = {r.doc_id: r.component_id
-                for r in DD.near_dup_components(
-                    df, local_threshold=0).collect()}
-    assert got_iter == want
+    # default) and the iterative min-label loop — must agree exactly;
+    # bounds n-1 and n (n = directed edge rows, the probed stream) pin
+    # both outcomes of the size probe
+    n = 2 * len(pairs)
+    for bound in (0, n - 1, n):
+        got_b = {r.doc_id: r.component_id
+                 for r in DD.near_dup_components(
+                     df, local_threshold=bound).collect()}
+        assert got_b == want, bound
 
 
 def test_components_nonconvergence_raises(spark):
@@ -629,10 +633,11 @@ def test_containment_max_df_filters_universe(spark):
 def test_shingle_pair_counts_fast_path_equals_distributed(spark):
     """Round-6 small-corpus dispatch: ngram_jaccard_pairs /
     ngram_containment_pairs must produce IDENTICAL rows whether the
-    posting/pair stage runs as the single-task numpy kernel (default
-    threshold) or the distributed posting-list plan
-    (local_threshold=0), with and without the max_df cap, including
-    string ids (code order must equal UTF-8 order for id_a < id_b)."""
+    posting/pair stage runs as the single-task numpy kernel or the
+    distributed posting-list plan (local_threshold=0), with and without
+    the max_df cap, including string ids (code order must equal UTF-8
+    order for id_a < id_b). Bounds n-1 and n (n = (id, shingle) rows,
+    the probed stream) pin both outcomes of the size probe."""
     rows = []
     base = "the quick brown fox jumps over the lazy dog again and again"
     for i in range(40):
@@ -644,17 +649,54 @@ def test_shingle_pair_counts_fast_path_equals_distributed(spark):
     rows.append(("d900", ""))            # empty doc
     rows.append(("d901", "one two"))     # too short for 3-grams
     df = spark.createDataFrame(rows, "doc_id string, text string")
+    n = DD.doc_shingles(df, "doc_id", "text", 3).count()
 
     for max_df in (None, 5):
-        fast = sorted(map(tuple, DD.ngram_jaccard_pairs(
-            df, threshold=0.1, max_df=max_df).collect()))
         slow = sorted(map(tuple, DD.ngram_jaccard_pairs(
             df, threshold=0.1, max_df=max_df,
             local_threshold=0).collect()))
-        assert fast == slow and fast
-        cf = sorted(map(tuple, DD.ngram_containment_pairs(
-            df, threshold=0.3, max_df=max_df).collect()))
         cs = sorted(map(tuple, DD.ngram_containment_pairs(
             df, threshold=0.3, max_df=max_df,
             local_threshold=0).collect()))
-        assert cf == cs and cf
+        assert slow and cs
+        for bound in (n - 1, n, DD.LOCAL_POSTING_ROWS):
+            fast = sorted(map(tuple, DD.ngram_jaccard_pairs(
+                df, threshold=0.1, max_df=max_df,
+                local_threshold=bound).collect()))
+            assert fast == slow, (max_df, bound)
+            cf = sorted(map(tuple, DD.ngram_containment_pairs(
+                df, threshold=0.3, max_df=max_df,
+                local_threshold=bound).collect()))
+            assert cf == cs, (max_df, bound)
+
+
+def test_rows_if_small_probe_outcomes(spark):
+    """The shared size probe: ``None`` past the bound or at bound 0,
+    otherwise every row of the input."""
+    df = spark.range(10).toDF("x")
+    assert DD.rows_if_small(df, 0) is None
+    assert DD.rows_if_small(df, 9) is None
+    for bound in (10, 11):
+        small = DD.rows_if_small(df, bound)
+        assert sorted(r.x for r in small.collect()) == list(range(10))
+
+
+def test_distributed_branch_does_not_checkpoint_stream(spark, tmp_path):
+    """Past the bound, the size probe materializes at most bound + 1
+    rows and hands the distributed plan the stream unmaterialized: no
+    localCheckpoint'ed (ExistingRDD) scan of the shingle or anchor
+    stream may appear in the executed plans."""
+    from distributed_crawl_spark.functions import curation as CU
+
+    rows = [(i, f"shared words here and there doc{i} tail{i % 3}")
+            for i in range(12)]
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    for out in (
+        DD.ngram_jaccard_pairs(df, threshold=0.1, local_threshold=1),
+        CU.substring_spans(df, w=6, s=3, local_threshold=1),
+    ):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan

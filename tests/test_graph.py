@@ -584,9 +584,10 @@ def test_domain_rollup_site_view(spark):
 def test_local_fast_path_equals_iterative_path(spark):
     """The round-6 small-graph dispatch: every iterative graph query
     must produce IDENTICAL rows whether it takes the single-task numpy
-    replay (default threshold) or the DataFrame loop
-    (local_threshold=0 forces it) — including seeded/scaled trust and
-    the self-loop + parallel-edge corners the kernels dedup in-task."""
+    replay or the DataFrame loop (local_threshold=0 forces it) —
+    including seeded/scaled trust and the self-loop + parallel-edge
+    corners the kernels dedup in-task. Bounds n-1 and n (n = edge
+    rows, the probed stream) pin both outcomes of the size probe."""
     edges = _graph(n_nodes=29, n_edges=400) + [
         ("h3", "h3"),            # self loop
         ("solo", "solo"),        # self-loop-only host
@@ -594,26 +595,18 @@ def test_local_fast_path_equals_iterative_path(spark):
     ]
     df = spark.createDataFrame(edges, "src STRING, dst STRING")
     seeds = ["h0", "h5", "h11"]
+    n = len(edges)
 
-    fast = sorted(map(tuple, G.host_rank(df, iters=4).collect()))
-    slow = sorted(map(tuple, G.host_rank(
-        df, iters=4, local_threshold=0).collect()))
-    assert fast == slow
+    def check(query, **kw):
+        ref = sorted(map(tuple, query(df, local_threshold=0,
+                                      **kw).collect()))
+        for bound in (n - 1, n, G.LOCAL_ROWS):
+            got = sorted(map(tuple, query(df, local_threshold=bound,
+                                          **kw).collect()))
+            assert got == ref, (query.__name__, bound)
 
-    fast = sorted(map(tuple, G.hits_scores(df, iters=3).collect()))
-    slow = sorted(map(tuple, G.hits_scores(
-        df, iters=3, local_threshold=0).collect()))
-    assert fast == slow
-
+    check(G.host_rank, iters=4)
+    check(G.hits_scores, iters=3)
     for scaled in (False, True):
-        fast = sorted(map(tuple, G.trust_rank(
-            df, seeds, iters=4, scaled_teleport=scaled).collect()))
-        slow = sorted(map(tuple, G.trust_rank(
-            df, seeds, iters=4, scaled_teleport=scaled,
-            local_threshold=0).collect()))
-        assert fast == slow
-
-    fast = sorted(map(tuple, G.label_communities(df, iters=4).collect()))
-    slow = sorted(map(tuple, G.label_communities(
-        df, iters=4, local_threshold=0).collect()))
-    assert fast == slow
+        check(G.trust_rank, seeds=seeds, iters=4, scaled_teleport=scaled)
+    check(G.label_communities, iters=4)

@@ -152,7 +152,8 @@ def test_fast_path_equals_distributed(spark):
     """Round-6 small-anchor-stream dispatch: the single-task
     census/extend/merge tail must equal the distributed plan
     (local_threshold=0 forces it) on the adversarial fuzz corpus,
-    with and without max_df."""
+    with and without max_df. Bounds n-1 and n (n = anchor rows, the
+    probed stream) pin both outcomes of the size probe."""
     rng = random.Random(11)
     vocab = [f"t{j}" for j in range(9)]
     passage = " ".join(f"p{j}" for j in range(12))
@@ -166,16 +167,20 @@ def test_fast_path_equals_distributed(spark):
     df = spark.createDataFrame(
         list(docs.items()), "doc_id long, text string"
     )
+    # k = w - s + 1 = 5
+    n = CU._winnow_anchor_rows(df, 5, 4, "doc_id", "text").count()
     for max_df in (None, 6):
-        fast = sorted(
-            map(tuple, CU.substring_spans(
-                df, w=8, s=4, max_df=max_df).collect())
-        )
         slow = sorted(
             map(tuple, CU.substring_spans(
                 df, w=8, s=4, max_df=max_df,
                 local_threshold=0).collect())
         )
-        assert fast == slow, max_df
         if max_df is None:
-            assert fast  # the uncapped corpus does produce spans
+            assert slow  # the uncapped corpus does produce spans
+        for bound in (n - 1, n, CU.LOCAL_ROWS):
+            fast = sorted(
+                map(tuple, CU.substring_spans(
+                    df, w=8, s=4, max_df=max_df,
+                    local_threshold=bound).collect())
+            )
+            assert fast == slow, (max_df, bound)
