@@ -31,6 +31,7 @@ value-for-value. Spark's own xxhash64/hash are NOT used in checked outputs.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -54,29 +55,6 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 MINHASH_K = len(MINHASH_PARAMS)  # 16 hash functions
 LSH_BANDS = 4                     # 4 bands × 4 rows
 LSH_ROWS = MINHASH_K // LSH_BANDS
-
-
-def _resolve_materializer(materializer, default: str | None):
-    """Shared reuse hook: ``(df, name) -> df``. ``None`` → the family's
-    measured default ('persist' or pure plan); ``False`` → pure plan;
-    ``'persist'`` → MEMORY_AND_DISK; a callable is used as-is (e.g. the
-    driver's staged-write pattern, operators/seen.py)."""
-    if materializer is None:
-        materializer = default
-    if callable(materializer):
-        return materializer
-    if materializer == "persist":
-        from pyspark import StorageLevel
-
-        def persist(df: DataFrame, name: str) -> DataFrame:
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-        return persist
-
-    def identity(df: DataFrame, name: str) -> DataFrame:
-        return df
-
-    return identity
 
 
 # Row count under which a size-dispatched query (the graph iterations,
@@ -257,7 +235,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.5,
                         max_df: int | None = None,
-                        materializer=None,
                         local_threshold: int = LOCAL_POSTING_ROWS
                         ) -> DataFrame:
     """Near-dup pairs by word-n-gram Jaccard similarity ≥ threshold.
@@ -281,17 +258,14 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     materializes an unbounded reducer-side array. Without ``max_df``
     the head list is unbounded — always set it at corpus scale.
 
-    ``materializer`` (``(df, name) -> df``) controls reuse of the
-    posting-list table between its two consumers (per-doc counts and
-    pair enumeration). Default ``None`` → ``"persist"``
-    (MEMORY_AND_DISK): with the round-6 Arrow shingle kernel feeding
-    the census, re-deriving the posting subtree means re-running the
+    On the distributed branch the posting-list table feeds two
+    consumers (per-doc counts and pair enumeration), so it is persisted
+    (MEMORY_AND_DISK, which spills to local disk when the index exceeds
+    executor memory): with the round-6 Arrow shingle kernel feeding the
+    census, re-deriving the posting subtree means re-running the
     kernel, and the interleaved A/B that previously favoured the pure
     plan now favours persist (sf0.1: 1.65s plain vs 1.31s persisted
-    steady-state, 5.5 vs 4.2 first-run). Pass ``False`` for the pure
-    plan; a callable plugs in the driver's staged-write pattern
-    (``operators/seen.py``) to spill to parquet when the index exceeds
-    cluster memory.
+    steady-state, 5.5 vs 4.2 first-run).
 
     Returns (id_a, id_b, n_inter, n_a, n_b, jaccard) with id_a < id_b.
     """
@@ -301,7 +275,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         _shingle_pair_counts(docs, id_col, text_col, n, max_df,
-                             materializer, local_threshold)
+                             local_threshold)
         .withColumn("jaccard_u", F.floor(jac * 1_000_000).cast("long"))
         .filter(jac >= threshold)
         .select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard_u")
@@ -382,7 +356,6 @@ def _local_pair_counts(ds: DataFrame, id_col: str,
 
 def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
                          n: int, max_df: int | None,
-                         materializer,
                          local_threshold: int = LOCAL_POSTING_ROWS
                          ) -> DataFrame:
     """Shared posting-list machinery for the set-overlap family
@@ -392,11 +365,10 @@ def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
     :func:`ngram_jaccard_pairs` (single shingle shuffle, bounded
     posting arrays under ``max_df``, array-projection pair
     enumeration) live here."""
-    materializer = _resolve_materializer(materializer, default="persist")
     ds = doc_shingles(docs, id_col, text_col, n)
     # small-corpus fast path: the whole census/filter/pair stage in one
-    # task over the probe's checkpointed shingle rows (the materializer
-    # is moot there — a single pass reads them once)
+    # task over the probe's checkpointed shingle rows (no posting-list
+    # persist there — a single pass reads them once)
     small = rows_if_small(ds, local_threshold)
     if small is not None:
         return _local_pair_counts(small, id_col, max_df)
@@ -413,12 +385,9 @@ def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
             .select("shingle")
         )
         ds = ds.join(rare, "shingle")
-    posts = materializer(
-        ds.groupBy("shingle").agg(
-            F.array_sort(F.collect_list(id_col)).alias("docs")
-        ),
-        "jaccard_postings",
-    )
+    posts = ds.groupBy("shingle").agg(
+        F.array_sort(F.collect_list(id_col)).alias("docs")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     counts = (
         posts.select(F.explode("docs").alias(id_col))
         .groupBy(id_col)
@@ -449,7 +418,6 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
                             text_col: str = "text", n: int = 3,
                             threshold: float = 0.8,
                             max_df: int | None = None,
-                            materializer=None,
                             local_threshold: int = LOCAL_POSTING_ROWS
                             ) -> DataFrame:
     """ASYMMETRIC near-dup: shingle containment C(A⊂B) = |S_A ∩ S_B| /
@@ -474,7 +442,7 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     n_inter / n_contained); a pair of mutual near-dups appears in both
     directions."""
     pairs = _shingle_pair_counts(docs, id_col, text_col, n, max_df,
-                                 materializer, local_threshold)
+                                 local_threshold)
     directed = pairs.select(
         F.explode(
             F.array(
@@ -591,36 +559,21 @@ def _band_key(b: int) -> Column:
     )
 
 
-def lsh_bucket_keys(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, band, band_key) from row-shaped signatures (compat view;
-    the pair join below derives keys straight from the columnar form)."""
-    in_band = (
-        signatures.withColumn("band", (F.col("i") / F.lit(LSH_ROWS)).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(F.array_sort(F.collect_list(F.struct("i", "minhash"))).alias("sig"))
-    )
-    key = F.md5(F.concat_ws(",", F.transform(F.col("sig"), lambda s: s["minhash"].cast("string"))))
-    return in_band.select(id_col, "band", key.alias("band_key"))
-
-
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3,
-                      materializer=None) -> DataFrame:
+                      text_col: str = "text", n: int = 3) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
 
     The pair join happens per (band, band_key) — output-bound, never
     all-pairs. At 10^10 docs this is the only dedup plan that survives.
     Band keys come straight off the columnar signature (one shuffle total
     before the pair join; the band unpivot is a projection). The
-    signature table (N × k longs) is materialized before the self-join
-    (default persist — same reason as :func:`simhash_pairs64`: both join
+    signature table (N × k longs) is persisted before the self-join
+    (same reason as :func:`simhash_pairs64`: both join
     sides otherwise re-run the shingle explode + signature shuffle).
     Returns (id_a, id_b, n_shared_bands), id_a < id_b.
     """
-    materializer = _resolve_materializer(materializer, default="persist")
-    cols = materializer(
-        _minhash_cols(docs, id_col, text_col, n), "minhash_signature"
-    )
+    cols = _minhash_cols(docs, id_col, text_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK)
     keys = F.array(*[_band_key(b) for b in range(LSH_BANDS)])
     buckets = cols.select(
         id_col, F.posexplode(keys).alias("band", "band_key")
@@ -673,7 +626,7 @@ def dedup_index(corpus: DataFrame, id_col: str = "doc_id",
 
 def incremental_dedup(new_docs: DataFrame, index: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 3, materializer=None) -> DataFrame:
+                      n: int = 3) -> DataFrame:
     """Deduplicate a crawl increment against an existing corpus's
     :func:`dedup_index` WITHOUT touching the corpus itself.
 
@@ -694,12 +647,10 @@ def incremental_dedup(new_docs: DataFrame, index: DataFrame,
     increment's own index in) — this operator answers "is it already in
     the corpus", nothing else.
     """
-    materializer = _resolve_materializer(materializer, default="persist")
     digest_idx = index.filter(F.col("kind") == "digest").select("key")
     band_idx = index.filter(F.col("kind") == "band").select("band", "key")
-    new_cols = materializer(
-        _minhash_cols(new_docs, id_col, text_col, n), "incr_signature"
-    )
+    new_cols = _minhash_cols(new_docs, id_col, text_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK)
     keys = F.array(*[_band_key(b) for b in range(LSH_BANDS)])
     exact_ids = (
         new_docs.select(id_col, F.md5(F.col(text_col)).alias("key"))
@@ -1044,8 +995,7 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
 
 def simhash_pairs64(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
-                    max_hamming: int = 3,
-                    materializer=None) -> DataFrame:
+                    max_hamming: int = 3) -> DataFrame:
     """64-bit SimHash hamming-ball pair dedup — the 10^9+-doc scale form:
     :func:`simhash64` text fingerprints fed through the generic
     :func:`hamming_pairs64` pigeonhole machinery.
@@ -1053,14 +1003,12 @@ def simhash_pairs64(docs: DataFrame, id_col: str = "doc_id",
     """
     return hamming_pairs64(
         simhash64(docs, id_col, text_col), id_col=id_col,
-        max_hamming=max_hamming, materializer=materializer,
-    )
+        max_hamming=max_hamming)
 
 
 def hamming_pairs64(fp: DataFrame, id_col: str = "doc_id",
                     hi_col: str = "sh_hi", lo_col: str = "sh_lo",
-                    max_hamming: int = 3,
-                    materializer=None) -> DataFrame:
+                    max_hamming: int = 3) -> DataFrame:
     """Hamming-ball pair join over ANY 64-bit two-half fingerprint table
     — :func:`simhash64` text prints, :func:`~distributed_crawl_spark.
     operators.multimodal.image_dhash` perceptual image prints, or any
@@ -1078,10 +1026,9 @@ def hamming_pairs64(fp: DataFrame, id_col: str = "doc_id",
     half boundary (width must divide 32).
 
     The fingerprint table (N × 3 longs — tiny relative to the corpus)
-    is MATERIALIZED before the self-join (default: persist): both join
+    is PERSISTED (MEMORY_AND_DISK) before the self-join: both join
     sides otherwise re-derive the fingerprint pass from the raw input,
-    measured 14s lazy vs 2.7s materialized at sf0.1. ``materializer``:
-    see :func:`_resolve_materializer`.
+    measured 14s lazy vs 2.7s materialized at sf0.1.
     Returns (id_a, id_b, hamming), id_a < id_b.
     """
     blocks = max_hamming + 1
@@ -1089,15 +1036,11 @@ def hamming_pairs64(fp: DataFrame, id_col: str = "doc_id",
     width = 64 // blocks
     assert 32 % width == 0, "blocks must not straddle the half boundary"
     mask = F.lit((1 << width) - 1)
-    materializer = _resolve_materializer(materializer, default="persist")
-    fp = materializer(
-        fp.select(
-            id_col,
-            F.col(hi_col).alias("sh_hi"),
-            F.col(lo_col).alias("sh_lo"),
-        ),
-        "hamming64_fp",
-    )
+    fp = fp.select(
+        id_col,
+        F.col(hi_col).alias("sh_hi"),
+        F.col(lo_col).alias("sh_lo"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     per_half = 32 // width
     vals = F.array(
         *[
@@ -1136,8 +1079,7 @@ def hamming_pairs64(fp: DataFrame, id_col: str = "doc_id",
 
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 32,
-                  max_hamming: int = 3,
-                  materializer=None) -> DataFrame:
+                  max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ max_hamming,
     via pigeonhole blocking (the Manku/WWW'07 web-dedup strategy): split
     the fingerprint into ``max_hamming + 1`` equal blocks — a pair inside
@@ -1154,10 +1096,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     assert bits % blocks == 0, "bits must split into max_hamming+1 blocks"
     width = bits // blocks
     mask = F.lit((1 << width) - 1)
-    # materialized for the same reason as simhash_pairs64: both join
+    # persisted for the same reason as hamming_pairs64: both join
     # sides otherwise recompute the fingerprint pass from raw text
-    materializer = _resolve_materializer(materializer, default="persist")
-    fp = materializer(simhash(docs, id_col, text_col, bits), "simhash_fp")
+    fp = simhash(docs, id_col, text_col, bits).persist(
+        StorageLevel.MEMORY_AND_DISK)
     vals = F.array(
         *[
             F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(mask)
@@ -1378,7 +1320,7 @@ def canonical_groups(pages_meta, url_col: str = "url",
 def mirror_detect(docs: DataFrame, host_col: str = "host",
                   text_col: str = "text", min_shared: int = 2,
                   min_share_bp: int = 2500,
-                  max_df: int = 64, materializer=None) -> DataFrame:
+                  max_df: int = 64) -> DataFrame:
     """Host-mirror detection: pairs of hosts whose content overlaps so
     heavily that one is (partly) a mirror of the other — the classic
     web-crawl dedup pass ABOVE document granularity (Bharat & Broder's
@@ -1399,18 +1341,13 @@ def mirror_detect(docs: DataFrame, host_col: str = "host",
     knob as ngram_jaccard's), pair census bounded by |host pairs that
     actually share content|, host totals broadcast back. The distinct
     (host, digest) census feeds BOTH the totals rollup and the pair
-    enumeration, so it is persisted by default (same two-consumer
-    rationale as the MinHash signature persist); pass
-    ``materializer=False`` for the pure plan.
+    enumeration, so it is persisted (MEMORY_AND_DISK; same
+    two-consumer rationale as the MinHash signature persist).
     """
-    mat = _resolve_materializer(materializer, "persist")
-    x = mat(
-        docs.select(
-            F.col(host_col).alias("host"),
-            F.md5(F.col(text_col)).alias("__dg"),
-        ).distinct(),
-        "mirror_digests",
-    )
+    x = docs.select(
+        F.col(host_col).alias("host"),
+        F.md5(F.col(text_col)).alias("__dg"),
+    ).distinct().persist(StorageLevel.MEMORY_AND_DISK)
     totals = x.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("n_digests")
     )

@@ -19,7 +19,7 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import LOCAL_ROWS, rows_if_small
@@ -191,6 +191,56 @@ def _local_communities(e: DataFrame, iters: int) -> DataFrame:
     )
 
 
+def _host_nodes(e: DataFrame) -> DataFrame:
+    """(host) for every host appearing as src or dst of ``e``,
+    checkpointed: every iteration of the graph loops re-reads it."""
+    return (
+        e.select(F.col("src").alias("host"))
+        .unionByName(e.select(F.col("dst").alias("host")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _power_iteration(e: DataFrame, nodes: DataFrame, iters: int,
+                     damping_x1000: int, out_name: str, init: Column,
+                     teleport: Column) -> DataFrame:
+    """The quantized power iteration behind :func:`host_rank` and
+    :func:`trust_rank` (the DataFrame form of :func:`_local_rank`).
+    ``init`` and ``teleport`` are long Columns over ``nodes.host``:
+    uniform for host_rank, seed-masked for trust_rank. ``ranks`` is
+    referenced once per iteration, so the lazy plan grows linearly in
+    ``iters`` with no per-iteration checkpoint (see host_rank)."""
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    e = e.join(outdeg, "src").localCheckpoint()  # static across iterations
+    ranks = nodes.withColumn(out_name, init)
+    for _ in range(iters):
+        contrib = (
+            e.join(
+                ranks.select(
+                    F.col("host").alias("src"), F.col(out_name).alias("r")
+                ),
+                "src",
+            )
+            .groupBy("dst")
+            .agg(
+                F.sum(F.floor(F.col("r") / F.col("outdeg")).cast("long"))
+                .alias("s")
+            )
+        )
+        ranks = (
+            nodes.join(contrib, nodes["host"] == contrib["dst"], "left")
+            .select(
+                "host",
+                (teleport + F.floor(
+                    F.lit(damping_x1000) * F.coalesce(F.col("s"), F.lit(0))
+                    / F.lit(1000)
+                ).cast("long")).alias(out_name),
+            )
+        )
+    return ranks
+
+
 def host_rank(edges: DataFrame, iters: int = 5, damping_x1000: int = 850,
               src_col: str = "src", dst_col: str = "dst",
               local_threshold: int = LOCAL_ROWS) -> DataFrame:
@@ -236,41 +286,11 @@ def host_rank(edges: DataFrame, iters: int = 5, damping_x1000: int = 850,
     small = rows_if_small(e, local_threshold)
     if small is not None:
         return _local_rank(small, iters, damping_x1000, "pr_x1e6")
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint()
+    return _power_iteration(
+        e, _host_nodes(e), iters, damping_x1000, "pr_x1e6",
+        init=F.lit(RANK_UNIT).cast("long"),
+        teleport=F.lit((1000 - damping_x1000) * 1000).cast("long"),
     )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = e.join(outdeg, "src").localCheckpoint()  # static across iterations
-    base = F.lit((1000 - damping_x1000) * 1000).cast("long")
-    ranks = nodes.withColumn("pr_x1e6", F.lit(RANK_UNIT).cast("long"))
-    for _ in range(iters):
-        contrib = (
-            e.join(
-                ranks.select(
-                    F.col("host").alias("src"), F.col("pr_x1e6").alias("pr")
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum(F.floor(F.col("pr") / F.col("outdeg")).cast("long"))
-                .alias("s")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, nodes["host"] == contrib["dst"], "left")
-            .select(
-                "host",
-                (base + F.floor(
-                    F.lit(damping_x1000) * F.coalesce(F.col("s"), F.lit(0))
-                    / F.lit(1000)
-                ).cast("long")).alias("pr_x1e6"),
-            )
-        )
-    return ranks
 
 
 def rank_budgets(ranks: DataFrame, total_budget: int,
@@ -672,56 +692,21 @@ def trust_rank(edges: DataFrame, seeds: "list[str]",
     if small is not None:
         return _local_rank(small, iters, damping_x1000, "trust_x1e6",
                            seeds=seeds, scaled_teleport=scaled_teleport)
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _host_nodes(e)
     seed_arr = F.array(*[F.lit(s) for s in sorted(set(seeds))])
     is_seed = F.array_contains(seed_arr, F.col("host"))
     scale = 1
     if scaled_teleport:
         scale = max(1, nodes.count() // len(set(seeds)))
-    seed_base = (
-        F.when(is_seed, F.lit((1000 - damping_x1000) * 1000 * scale))
-        .otherwise(F.lit(0)).cast("long")
+
+    def on_seeds(v: int) -> Column:
+        return F.when(is_seed, F.lit(v)).otherwise(F.lit(0)).cast("long")
+
+    return _power_iteration(
+        e, nodes, iters, damping_x1000, "trust_x1e6",
+        init=on_seeds(RANK_UNIT * scale),
+        teleport=on_seeds((1000 - damping_x1000) * 1000 * scale),
     )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = e.join(outdeg, "src").localCheckpoint()  # static across iterations
-    ranks = nodes.withColumn(
-        "trust_x1e6",
-        F.when(is_seed, F.lit(RANK_UNIT * scale))
-        .otherwise(F.lit(0)).cast("long"),
-    )
-    for _ in range(iters):
-        contrib = (
-            e.join(
-                ranks.select(
-                    F.col("host").alias("src"),
-                    F.col("trust_x1e6").alias("t"),
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(
-                F.sum(F.floor(F.col("t") / F.col("outdeg")).cast("long"))
-                .alias("s")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, nodes["host"] == contrib["dst"], "left")
-            .select(
-                "host",
-                (seed_base + F.floor(
-                    F.lit(damping_x1000) * F.coalesce(F.col("s"), F.lit(0))
-                    / F.lit(1000)
-                ).cast("long")).alias("trust_x1e6"),
-            )
-            # ranks referenced once per iteration — linear lazy plan, no
-            # per-iteration checkpoint (see host_rank)
-        )
-    return ranks
 
 
 def spam_mass(edges: DataFrame, seeds: "list[str]",
@@ -873,12 +858,7 @@ def label_communities(edges: DataFrame, iters: int = 4,
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _host_nodes(e)
     labels = nodes.withColumn("community", F.col("host"))
     w = Window.partitionBy("host").orderBy(
         F.col("n").desc(), F.col("community")

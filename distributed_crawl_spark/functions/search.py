@@ -51,8 +51,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import tokens
-
 IDF_SCALE = 1_000_000
 TF_CAP = 1_000  # BM25 tf saturation guard; keeps products inside int64
 
@@ -290,39 +288,6 @@ def _phrase_terms(phrase) -> list[str]:
     if not terms:
         raise ValueError("phrase must contain at least one token")
     return terms
-
-
-def _phrase_coverage(tok_rows: DataFrame, terms: Sequence[str]) -> DataFrame:
-    """(doc_id, ptf) — how many times the exact token phrase occurs
-    (overlaps counted, capped at :data:`TF_CAP`).
-
-    Anchor-coverage plan: every matching token votes for the phrase
-    START positions it is compatible with (``anchor = pos - i`` for its
-    offsets ``i`` in the phrase — a term repeated in the phrase votes
-    once per offset), then a (doc, anchor) census keeps anchors covered
-    by ALL |phrase| distinct offsets. One broadcast join against the
-    |phrase|-row offset table + one map-combinable census — no arrays,
-    no per-doc state, uniform in (doc, anchor) at any corpus size.
-    """
-    spark = tok_rows.sparkSession
-    offsets = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(terms)], "i long, term string"
-    )
-    return (
-        tok_rows.join(F.broadcast(offsets), "term")
-        .select(
-            "doc_id", (F.col("pos") - F.col("i")).alias("anchor"), "i"
-        )
-        .filter(F.col("anchor") >= 0)
-        .groupBy("doc_id", "anchor")
-        .agg(F.count_distinct(F.col("i")).alias("nc"))
-        .filter(F.col("nc") == len(terms))
-        .groupBy("doc_id")
-        .agg(
-            F.least(F.count(F.lit(1)), F.lit(TF_CAP)).cast("long")
-            .alias("ptf")
-        )
-    )
 
 
 _PHRASE_SCORE = (

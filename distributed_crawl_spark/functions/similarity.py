@@ -550,8 +550,8 @@ def embedding_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.4,
 
 def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
              centroids: DataFrame | None = None,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             materializer=None) -> DataFrame:
+             id_col: str = "vec_id", vec_col: str = "embedding"
+             ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication over an embedding column — cluster the corpus with
     the IVF coarse quantizer, compare pairs ONLY within a cluster, and
@@ -580,21 +580,20 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
     keep) with component_id = vec_id for singletons and keep =
     (component_id == vec_id).
     """
-    from .dedup import _resolve_materializer, near_dup_components
+    from pyspark import StorageLevel
 
-    materialize = _resolve_materializer(materializer, "persist")
+    from .dedup import near_dup_components
+
     cents = (
         centroids
         if centroids is not None
         else seed_centroids(vectors, n_cells, id_col, vec_col)
     )
-    assigned = materialize(
-        # the norm rides the persisted assignment — computed once per
-        # vector at materialization, never per within-cell pair
-        ivf_assign(vectors, cents, nprobe=1, id_col=id_col,
-                   vec_col=vec_col).withColumn("_n", _norm_col("v")),
-        "semdedup_assigned",
-    )
+    # the norm rides the persisted assignment — computed once per
+    # vector at materialization, never per within-cell pair
+    assigned = ivf_assign(
+        vectors, cents, nprobe=1, id_col=id_col, vec_col=vec_col
+    ).withColumn("_n", _norm_col("v")).persist(StorageLevel.MEMORY_AND_DISK)
     a = assigned.select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
         F.col("_n").alias("_na"), "cell_id"

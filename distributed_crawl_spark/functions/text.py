@@ -230,15 +230,6 @@ EXTRACT_RESULT_TYPE = StructType(
 )
 
 
-EXTRACT_ANCHOR_RESULT_TYPE = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("links", ArrayType(StringType())),
-        StructField("anchors", ANCHOR_PAIR_TYPE),
-    ]
-)
-
-
 def make_extract_udf(max_links: int | None = 10, mode: str = "basic",
                      with_anchors: bool = False,
                      honor_nofollow: bool = False,
@@ -331,12 +322,6 @@ def make_extract_udf(max_links: int | None = 10, mode: str = "basic",
         return pd.DataFrame(out)
 
     return extract
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Text-only variant (no link pass) for extraction-only pipelines."""
-    return html.map(lambda h: extract_text_and_hrefs(h)[0])
 
 
 class _MarkdownParser(HTMLParser):

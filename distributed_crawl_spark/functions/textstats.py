@@ -684,8 +684,7 @@ def unigram_logprob_gate(docs, p: float = 0.1, vocab_k: int = 50_000,
 
 
 def ccnet_buckets(docs, vocab_k: int = 50_000, id_col: str = "doc_id",
-                  text_col: str = "text", lang_col: str | None = None,
-                  materializer=None):
+                  text_col: str = "text", lang_col: str | None = None):
     """CCNet head/middle/tail perplexity buckets (Wenzek et al. 2020):
     per LANGUAGE, split the corpus into the fluent top third ("head"),
     the middle third, and the gibberish bottom third ("tail") of the LM
@@ -711,20 +710,18 @@ def ccnet_buckets(docs, vocab_k: int = 50_000, id_col: str = "doc_id",
     table is languages-sized and broadcasts back. Returns
     (id, lang, logprob_q, q1, q2, bucket) for every doc.
     """
+    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    from .dedup import _resolve_materializer
-
-    materialize = _resolve_materializer(materializer, "persist")
     lp = unigram_logprob(docs, vocab_k=vocab_k, id_col=id_col,
                          text_col=text_col)
     lang = (F.col(lang_col) if lang_col
             else lang_id(F.col(text_col))).alias("lang")
     # scored feeds three consumers (cumulative counts, per-lang totals,
-    # the final bucket join) — materialize so the census+scoring subtree
+    # the final bucket join) — persist so the census+scoring subtree
     # runs once, not once per consumer
-    scored = materialize(docs.select(id_col, lang).join(lp, id_col),
-                         "ccnet_scored")
+    scored = docs.select(id_col, lang).join(lp, id_col).persist(
+        StorageLevel.MEMORY_AND_DISK)
 
     counts = scored.groupBy("lang", "logprob_q").agg(
         F.count(F.lit(1)).alias("c"))
@@ -883,10 +880,11 @@ def bigram_logprob(docs, vocab_k: int = 50_000, bigram_k: int = 200_000,
         .limit(vocab_k)
         .select("tok", "c")
     )
-    # the bigram stream is read twice (vocab census + scoring join) and
-    # the interpreted higher-order shingle transform dominates its cost
-    # — persist so it evaluates once per run (lives and dies inside
-    # this plan's execution, guide §5)
+    # the bigram stream has two consumers (vocab census + scoring join)
+    # and the interpreted higher-order shingle transform dominates its
+    # cost — persist so it evaluates once, not once per consumer. The
+    # CacheManager keeps the entry after the query finishes, so a later
+    # bigram_logprob over the same docs reuses it (ROADMAP item 1).
     bgs = docs.select(
         id_col, F.explode(shingles(F.col(text_col), 2)).alias("bg")
     ).persist()

@@ -170,12 +170,6 @@ def is_geo_blocked(text: Column) -> Column:
     return cond
 
 
-def url_hash64(url: Column) -> Column:
-    """Bucketing key for the seen-set layer: xxhash64 of the RAW url string
-    (dedup equality stays on the raw string — SURVEY.md §2.10)."""
-    return F.xxhash64(url)
-
-
 def ensure_scheme(url: Column) -> Column:
     """S2 — hybrid_crawler.py:259-260: default ``https://`` when the seed
     URL has no http(s) scheme."""

@@ -27,7 +27,7 @@ one map-combinable (query, vec) sum + WindowGroupLimit top-k, over the
 probed cells only; add = encode the increment against the FROZEN
 centroids/codebooks and append its partitions — O(increment), the
 corpus codes are never read or rewritten (measured flat:
-tools/vecindex_scaling.py, BENCH.md round 5).
+tools/vecindex_scaling.py at commit 636ac4a, BENCH.md round 5).
 """
 
 from __future__ import annotations

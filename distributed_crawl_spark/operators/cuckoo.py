@@ -49,7 +49,6 @@ CUCKOO_STATE_SCHEMA = StructType(
 
 SLOTS = 4
 MAX_KICKS = 500
-_FP_MOD = np.uint64(65535)
 
 
 def _spread(fp: np.ndarray) -> np.ndarray:

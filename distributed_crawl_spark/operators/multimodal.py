@@ -113,22 +113,6 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through mapInPandas tagging the
-    target size (a real implementation rewrites bytes in place)."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["media_id", "kind", "payload", "mime"]].copy()
-            yield out
-
-    return (
-        media.mapInPandas(process, MEDIA_SCHEMA)
-        .withColumn("target_width", F.lit(width))
-        .withColumn("target_height", F.lit(height))
-    )
-
-
 AUDIO_META_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

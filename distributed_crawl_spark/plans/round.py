@@ -212,20 +212,3 @@ def child_candidates(
         .agg(F.min_by(F.struct(*rest), F.struct("level", "attempt", "seq")).alias("w"))
         .select("url", *[F.col(f"w.{c}").alias(c) for c in rest])
     )
-
-
-def split_fetch_results(fetched: DataFrame, cfg: CrawlConfig):
-    """(ok, retry, failed) from the fetch+extract output.
-
-    Miss → attempt+1; back to the frontier while
-    ``attempt_count < retry_attempts`` (run_crawl_local.py:240-250).
-    The reference increments attempt_count at processing start
-    (run_crawl_local.py:208), so a row that has been tried
-    ``retry_attempts`` times is failed."""
-    ok = fetched.filter(F.col("ok"))
-    miss = fetched.filter(~F.col("ok")).withColumn(
-        "attempt", F.col("attempt") + 1
-    )
-    retry = miss.filter(F.col("attempt") < cfg.retry_attempts).select(*FRONTIER_COLS)
-    failed = miss.filter(F.col("attempt") >= cfg.retry_attempts)
-    return ok, retry, failed

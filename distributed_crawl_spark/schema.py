@@ -1,4 +1,4 @@
-"""Explicit StructTypes for every table in the engine.
+"""Explicit StructTypes for the engine's input and state tables.
 
 The reference is schemaless Python dicts (SURVEY.md §1); here every table
 is a fixed-schema columnar relation. The ``pages`` schema is the driver's
@@ -7,17 +7,17 @@ input contract (BASELINE.json ``input_hint``): Common-Crawl-style pages
 
 Reference shapes these formalize:
 - frontier   ← ``pending_urls`` FIFO + ``CrawlStatus`` (run_crawl_local.py:27-39,68)
-- url_seen   ← ``crawl_status`` dict keys, the dedup set (run_crawl_local.py:69,165)
-- crawl_results ← ``crawl_results`` dict (run_crawl_local.py:70,225)
 - round_metrics ← session counters (hybrid_crawler.py:71-78)
-- errors     ← ``error_urls.txt`` sink (hybrid_crawler.py:688-709)
 - seeds      ← CSV import (hybrid_crawler.py:204-293)
+
+``url_seen``, ``crawl_results`` and the error log take their columns from
+the round plans that write them (``streaming/driver.py``); no second copy
+is kept here to drift from them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -61,38 +61,6 @@ FRONTIER_SCHEMA = StructType(
     ]
 )
 
-URL_SEEN_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),  # raw string — equality key
-        StructField("url_hash", LongType(), False),  # xxhash64(url) for bucketing
-        StructField("status", StringType(), False),  # pending|completed|failed
-        StructField("level", IntegerType(), False),
-        StructField("attempt", IntegerType(), False),
-        StructField("parent_url", StringType(), True),
-        StructField("discovered_round", IntegerType(), False),
-        StructField("seq", LongType(), False),
-    ]
-)
-
-CRAWL_RESULTS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("seq", LongType(), False),
-        StructField("level", IntegerType(), False),
-        StructField("round", IntegerType(), False),
-        StructField("text", StringType(), True),
-        StructField("md_hash", StringType(), True),  # sha256(text)[:16]
-        StructField("page_slug", StringType(), True),
-        StructField("filename", StringType(), True),
-        StructField("method", StringType(), True),
-        StructField("status_code", IntegerType(), True),
-        StructField("content_length", LongType(), True),
-        StructField("last_modified", TimestampType(), True),
-        StructField("extracted_links", ArrayType(StringType()), True),
-        StructField("geo_blocked", StringType(), True),  # 'true'/'false' tag
-    ]
-)
-
 ROUND_METRICS_SCHEMA = StructType(
     [
         StructField("round", IntegerType(), False),
@@ -115,16 +83,6 @@ ROUND_METRICS_SCHEMA = StructType(
         # next-frontier size from the same Observations (drain check runs
         # no count job); 0 in histories written before round 3
         StructField("frontier_size", LongType(), False),
-    ]
-)
-
-ERRORS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("round", IntegerType(), False),
-        StructField("reason", StringType(), True),
-        StructField("error", StringType(), True),
-        StructField("preview", StringType(), True),  # first 200 chars (R2)
     ]
 )
 

@@ -32,11 +32,6 @@ from ..plans.round import FRONTIER_COLS, child_candidates, seeds_to_frontier
 from ..schema import ROUND_METRICS_SCHEMA
 from .checkpoint import CheckpointStore
 
-_SEEN_COLS = [
-    "url", "url_hash", "status", "level", "attempt",
-    "parent_url", "discovered_round", "seq",
-]
-
 
 def _fork_join(concurrent: bool, *thunks):
     """Run independent staged-write actions concurrently from Python
