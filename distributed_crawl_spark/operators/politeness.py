@@ -35,15 +35,21 @@ def rank_frontier(
     salt_threshold: int = 100_000,
     max_salts: int = 32,
     host_budgets: DataFrame | None = None,
+    budget_col: str | None = None,
 ) -> DataFrame:
     """Frontier with window rank + per-lane budget attached — ONE window
     shuffle; callers split selected/deferred by filtering ``rn`` against
     ``lane_budget`` (the driver materializes this once per round so the
     selected and deferred branches never recompute the window).
 
-    ``host_budgets`` (host, budget), e.g. from robots Crawl-delay
-    (operators/robots.py:crawl_delay_budgets), overrides the scalar
-    ``host_budget`` per host via a broadcast join — same single shuffle.
+    ``budget_col`` names a nullable per-row budget column of
+    ``frontier`` (e.g. robots Crawl-delay budgets,
+    operators/robots.py:crawl_delay_budget) that overrides the scalar
+    ``host_budget`` where it is not NULL; it is consumed (``lane_budget``
+    carries the effective value). ``host_budgets`` (host, budget) feeds
+    that same column through a broadcast join — same single shuffle;
+    when both are given the tighter one binds per host (LEAST, and a
+    host in only one of them keeps that one's budget).
     """
     heavy = (
         frontier.groupBy("host")
@@ -72,9 +78,14 @@ def rank_frontier(
             "host",
             "left",
         )
-        eff_budget = F.coalesce(F.col("__hb"), F.lit(host_budget).cast("long"))
-    else:
-        eff_budget = F.lit(host_budget).cast("long")
+        if budget_col is not None:  # least() skips NULLs
+            salted = salted.withColumn(
+                "__hb", F.least(F.col(budget_col), F.col("__hb"))
+            ).drop(budget_col)
+        budget_col = "__hb"
+    eff_budget = F.lit(host_budget).cast("long")
+    if budget_col is not None:
+        eff_budget = F.coalesce(F.col(budget_col).cast("long"), eff_budget)
 
     w = Window.partitionBy("host", "salt").orderBy("level", "attempt", "seq")
     lane_budget = F.when(
@@ -85,7 +96,7 @@ def rank_frontier(
     out = salted.withColumn("rn", F.row_number().over(w)).withColumn(
         "lane_budget", lane_budget.cast("long")
     )
-    return out.drop("__hb") if host_budgets is not None else out
+    return out.drop(budget_col) if budget_col is not None else out
 
 
 def split_ranked(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -130,7 +141,7 @@ def error_backoff_budgets(failures: DataFrame, base_budget: int,
     filtered to the last round's failures and counted (one combinable
     shuffle the caller already pays for its error histogram). This
     function itself is a pure projection; the output (host, budget)
-    plugs into ``rank_frontier``'s ``host_budgets`` broadcast hook, so
+    plugs into ``rank_frontier``'s ``host_budgets`` broadcast join, so
     the whole backoff path adds ZERO shuffles to a round. Integer
     shift arithmetic — deterministic and oracle-portable.
     """

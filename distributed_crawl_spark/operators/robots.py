@@ -1,11 +1,13 @@
 """Robots gate (north-rule addition — absent in the reference, SURVEY.md §2.6 J4).
 
 The robots table is (host, robots_txt). Frontier rows join it on ``host``
-— broadcast when small, shuffle otherwise — then a vectorized pandas UDF
-evaluates ``urllib.robotparser`` per row, caching one parsed
-RobotFileParser per distinct host inside each Arrow batch (batches arrive
-host-clustered after the politeness window's host partitioning, so the
-cache hit rate is high).
+— broadcast when small, shuffle otherwise — then ONE vectorized pandas
+UDF returns each row's verdict, ``struct(ok, delay_s)``: the
+``urllib.robotparser`` allow decision and the host's Crawl-delay. Both
+fields come from the same parsed RobotFileParser, cached per distinct
+robots text in the Python worker (:func:`parsed_robots`); the
+crawl-delay and sitemap UDFs share that cache, so a text is parsed once
+per worker however many rows and UDFs read it.
 
 NULL / empty robots_txt → allow-all (the crawler's conventional default
 for missing robots.txt).
@@ -13,32 +15,50 @@ for missing robots.txt).
 
 from __future__ import annotations
 
+from functools import lru_cache
 from urllib import robotparser
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                               StringType)
+                               StringType, StructField, StructType)
 
 USER_AGENT = "*"
+
+VERDICT_TYPE = StructType([
+    StructField("ok", BooleanType()),
+    StructField("delay_s", DoubleType()),
+])
+
+
+def parsed_robots(txt) -> robotparser.RobotFileParser | None:
+    """The parsed RobotFileParser for one robots text, None for a
+    NULL / blank text (allow-all, no Crawl-delay)."""
+    if txt is None or not str(txt).strip():
+        return None
+    return _parse(str(txt))
+
+
+@lru_cache(maxsize=4096)
+def _parse(txt: str) -> robotparser.RobotFileParser:
+    # keyed by the text itself, so a cached parse can never go stale
+    rp = robotparser.RobotFileParser()
+    rp.parse(txt.splitlines())
+    return rp
+
+
+def _delay(rp: robotparser.RobotFileParser | None) -> float | None:
+    d = rp.crawl_delay(USER_AGENT) if rp is not None else None
+    return float(d) if d is not None else None
 
 
 @pandas_udf(BooleanType())
 def robots_allowed_udf(url: pd.Series, robots_txt: pd.Series) -> pd.Series:
-    cache: dict[str, robotparser.RobotFileParser | None] = {}
-
     def allowed(u: str, txt) -> bool:
-        if txt is None or not str(txt).strip():
-            return True
-        txt = str(txt)
-        rp = cache.get(txt)
-        if rp is None:
-            rp = robotparser.RobotFileParser()
-            rp.parse(txt.splitlines())
-            cache[txt] = rp
-        return rp.can_fetch(USER_AGENT, u)
+        rp = parsed_robots(txt)
+        return rp is None or rp.can_fetch(USER_AGENT, u)
 
     return pd.Series(
         [allowed(u, t) for u, t in zip(url, robots_txt)], dtype=bool
@@ -47,31 +67,56 @@ def robots_allowed_udf(url: pd.Series, robots_txt: pd.Series) -> pd.Series:
 
 @pandas_udf(DoubleType())
 def robots_crawl_delay_udf(robots_txt: pd.Series) -> pd.Series:
-    """Crawl-delay seconds for USER_AGENT, NaN when unspecified — one
-    parsed RobotFileParser per distinct robots_txt per Arrow batch."""
-    cache: dict[str, float | None] = {}
-
-    def delay(txt) -> float | None:
-        if txt is None or not str(txt).strip():
-            return None
-        txt = str(txt)
-        if txt not in cache:
-            rp = robotparser.RobotFileParser()
-            rp.parse(txt.splitlines())
-            d = rp.crawl_delay(USER_AGENT)
-            cache[txt] = float(d) if d is not None else None
-        return cache[txt]
-
-    return pd.Series([delay(t) for t in robots_txt], dtype="float64")
+    """Crawl-delay seconds for USER_AGENT, NULL when unspecified."""
+    return pd.Series(
+        [_delay(parsed_robots(t)) for t in robots_txt], dtype="float64"
+    )
 
 
-def crawl_delay_budgets(
-    robots: DataFrame, round_seconds: float,
+@pandas_udf(VERDICT_TYPE)
+def robots_verdict_udf(url: pd.Series, robots_txt: pd.Series) -> pd.DataFrame:
+    """Per-row ``struct(ok, delay_s)``: the allow decision for ``url``
+    and the host's Crawl-delay (NULL when unspecified)."""
+    ok, delay = [], []
+    for u, t in zip(url, robots_txt):
+        rp = parsed_robots(t)
+        ok.append(rp is None or rp.can_fetch(USER_AGENT, u))
+        delay.append(_delay(rp))
+    return pd.DataFrame({
+        "ok": pd.Series(ok, dtype=bool),
+        "delay_s": pd.Series(delay, dtype="float64"),
+    })
+
+
+def gate_verdicts(
+    frontier: DataFrame, robots: DataFrame, broadcast_robots: bool = True
+) -> DataFrame:
+    """``frontier`` plus ``robots_ok`` and ``delay_s`` from one UDF pass.
+    ``robots`` has columns (host, robots_txt); hosts absent from it are
+    allowed with no Crawl-delay. The driver stages this once per round;
+    its allowed/denied sides are filters of the staged table and its
+    ``delay_s`` feeds :func:`crawl_delay_budget`."""
+    r = robots.select("host", "robots_txt")
+    if broadcast_robots:
+        r = F.broadcast(r)
+    v = robots_verdict_udf(F.col("url"), F.col("robots_txt"))
+    return (
+        frontier.join(r, "host", "left")
+        .withColumn("__v", v)
+        .select(*frontier.columns,
+                F.col("__v.ok").alias("robots_ok"),
+                F.col("__v.delay_s").alias("delay_s"))
+    )
+
+
+def crawl_delay_budget(
+    delay_s: Column, round_seconds: float,
     default_budget: int | None = None,
     round_no: int | None = None,
-) -> DataFrame:
-    """(host, budget): per-host politeness budget honoring robots
-    Crawl-delay. A host demanding one request per D seconds gets
+) -> Column:
+    """Per-host politeness budget honoring a Crawl-delay of ``delay_s``
+    seconds; NULL where the delay is NULL or not positive (the default
+    budget applies). A host demanding one request per D seconds gets
     ``floor(round_seconds / D)`` slots per round — the batch analog of
     inter-request spacing (rounds model a wall-clock window of
     ``round_seconds``; the reference has no robots support at all, and a
@@ -80,71 +125,58 @@ def crawl_delay_budgets(
     Delays LONGER than the round window are spread ACROSS rounds when
     ``round_no`` is given (the driver passes it): such a host gets one
     slot every ``ceil(D / round_seconds)`` rounds — budget 0 on its
-    off-rounds — with a per-host hash phase so long-delay hosts don't all
-    fire on the same round. Without ``round_no`` (window-only callers)
-    the budget floors at 1/round, which OVERSHOOTS robots by up to
-    D/round_seconds for those hosts — the documented politeness lower
-    bound of the stateless form, not the driver behavior.
-
-    Hosts without a Crawl-delay are omitted — the default budget applies
-    via coalesce in the politeness window. Tiny output (≤ #hosts in the
-    robots table): always broadcastable.
+    off-rounds — with a per-host hash phase (of column ``host``) so
+    long-delay hosts don't all fire on the same round.
+    Without ``round_no`` (window-only callers) the budget floors at
+    1/round, which OVERSHOOTS robots by up to D/round_seconds for those
+    hosts — the documented politeness lower bound of the stateless form,
+    not the driver behavior. ``default_budget`` caps the result.
     """
-    d = robots.select(
-        "host", robots_crawl_delay_udf(F.col("robots_txt")).alias("delay_s")
-    ).filter(F.col("delay_s").isNotNull() & (F.col("delay_s") > 0))
-    within = F.floor(
-        F.lit(float(round_seconds)) / F.col("delay_s")
-    ).cast("long")
+    rs = F.lit(float(round_seconds))
+    within = F.greatest(
+        F.lit(1).cast("long"), F.floor(rs / delay_s).cast("long")
+    )
     if round_no is None:
-        budget = F.greatest(F.lit(1).cast("long"), within)
+        budget = within
     else:
-        period = F.ceil(F.col("delay_s") / F.lit(float(round_seconds))).cast("long")
+        period = F.ceil(delay_s / rs).cast("long")
         phase = F.pmod(F.xxhash64("host"), period)
         on_round = F.pmod(F.lit(round_no) + phase, period) == 0
-        budget = F.when(
-            F.col("delay_s") <= F.lit(float(round_seconds)),
-            F.greatest(F.lit(1).cast("long"), within),
-        ).otherwise(
+        budget = F.when(delay_s <= rs, within).otherwise(
             F.when(on_round, F.lit(1)).otherwise(F.lit(0)).cast("long")
         )
     if default_budget is not None:  # never exceed the global cap
         budget = F.least(budget, F.lit(default_budget).cast("long"))
-    return d.select("host", budget.alias("budget"))
+    return F.when(delay_s > 0, budget)
 
 
-def apply_robots_gate(
-    frontier: DataFrame, robots: DataFrame, broadcast_robots: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (allowed, denied). ``robots`` has columns
-    (host, robots_txt); hosts absent from it are allowed."""
-    r = robots.select("host", "robots_txt")
-    if broadcast_robots:
-        r = F.broadcast(r)
-    joined = frontier.join(r, "host", "left")
-    flagged = joined.withColumn(
-        "robots_ok", robots_allowed_udf(F.col("url"), F.col("robots_txt"))
+def crawl_delay_budgets(
+    robots: DataFrame, round_seconds: float,
+    default_budget: int | None = None,
+    round_no: int | None = None,
+) -> DataFrame:
+    """(host, budget) from the robots table — :func:`crawl_delay_budget`
+    per host. Hosts without a positive Crawl-delay are omitted, so the
+    default budget applies to them. Tiny output (≤ #hosts in the robots
+    table): always broadcastable.
+    """
+    d = robots.select(
+        "host", robots_crawl_delay_udf(F.col("robots_txt")).alias("delay_s")
     )
-    allowed = flagged.filter(F.col("robots_ok")).drop("robots_ok", "robots_txt")
-    denied = flagged.filter(~F.col("robots_ok")).drop("robots_ok", "robots_txt")
-    return allowed, denied
+    b = crawl_delay_budget(F.col("delay_s"), round_seconds,
+                           default_budget, round_no)
+    return d.select("host", b.alias("budget")).filter(
+        F.col("budget").isNotNull()
+    )
 
 
 @pandas_udf(ArrayType(StringType()))
 def robots_sitemaps_udf(robots_txt: pd.Series) -> pd.Series:
     """``Sitemap:`` directive URLs per robots.txt (empty array when
-    none) — one parsed RobotFileParser per distinct text per batch."""
-    cache: dict[str, list[str]] = {}
-
+    none)."""
     def maps(txt) -> list[str]:
-        if txt is None or not str(txt).strip():
-            return []
-        txt = str(txt)
-        if txt not in cache:
-            rp = robotparser.RobotFileParser()
-            rp.parse(txt.splitlines())
-            cache[txt] = list(rp.site_maps() or [])
-        return cache[txt]
+        rp = parsed_robots(txt)
+        return list(rp.site_maps() or []) if rp is not None else []
 
     return pd.Series([maps(t) for t in robots_txt])
 
@@ -321,9 +353,9 @@ def robots_audit(fetched: DataFrame, robots: DataFrame,
     URLs the host's robots.txt disallowed. Zero is the only acceptable
     number — anything above it means a gate bypass (a retry path that
     skipped the gate, a stale robots cache, an alias host) and names
-    exactly where. The post-hoc twin of :func:`apply_robots_gate`
-    (which filters BEFORE fetching); same parsing path, so the audit
-    disagrees with the gate only when the log really did.
+    exactly where. The post-hoc twin of :func:`gate_verdicts` (which
+    filters BEFORE fetching); both read :func:`parsed_robots`, so the
+    audit disagrees with the gate only when the log really did.
 
     Output per host: n_fetched, n_denied, denied_bp (floor basis
     points), example_denied (min denied URL, NULL when clean), ordered

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..operators.fetch import fetch_hits, fetch_misses
 from ..operators.politeness import rank_frontier, split_ranked
-from ..operators.robots import apply_robots_gate
+from ..operators.robots import crawl_delay_budget, gate_verdicts
 from ..operators.seen import BloomSeenFilter, filter_unseen
 from ..plans.round import FRONTIER_COLS, child_candidates, seeds_to_frontier
 from ..schema import ROUND_METRICS_SCHEMA
@@ -72,6 +72,25 @@ def _fork_join(concurrent: bool, *thunks):
     if errors:
         raise errors[0]
     return results
+
+
+DELAY_BUDGET = "delay_budget"
+
+
+def _gate_allowed(gated: DataFrame, cfg: CrawlConfig, round_no: int) -> DataFrame:
+    """The allowed rows of a round's staged gate table. Under
+    ``honor_crawl_delay`` each carries its Crawl-delay budget for this
+    round as column ``DELAY_BUDGET`` (NULL: the scalar ``host_budget``
+    applies) — a Column expression over the staged ``delay_s``, so the
+    politeness window reads no robots table and runs no Python."""
+    ok = gated.filter(F.col("robots_ok")).drop("robots_ok")
+    if cfg.honor_crawl_delay:
+        ok = ok.withColumn(DELAY_BUDGET, crawl_delay_budget(
+            F.col("delay_s"), cfg.crawl_delay_round_seconds,
+            default_budget=cfg.host_budget,
+            round_no=round_no,  # spreads delays > window across rounds
+        ))
+    return ok.drop("delay_s")
 
 
 def _seen_events(frontier_like: DataFrame, status: str, round_no: int) -> DataFrame:
@@ -299,9 +318,6 @@ class CrawlDriver:
             raise RuntimeError("no checkpoint to resume from — call start()")
         return meta.get("round", -1) + 1
 
-    def _frontier_empty(self) -> bool:
-        return self.store.read(self.spark, "frontier").limit(1).count() == 0
-
     # -- one round ---------------------------------------------------------------
 
     def run_round(self, round_no: int) -> RoundStats:
@@ -316,16 +332,20 @@ class CrawlDriver:
         frontier = self.store.read(spark, "frontier")
         staging = self.store.begin()
 
-        # 1. robots gate — denied side is tiny; materialize it once so the
-        #    seen/errors writes don't re-run the gate
+        # 1. robots gate — ONE verdict pass, staged: allowed and denied are
+        #    parquet filters of it, and each row carries its Crawl-delay
         if self.robots is not None:
-            allowed, denied = apply_robots_gate(frontier, self.robots)
-            obs_denied = Observation()
-            denied = staging.write_scratch(
-                "_round_denied",
-                denied.observe(obs_denied, F.count(F.lit(1)).alias("n")),
+            obs_gate = Observation()
+            gated = staging.write_scratch(
+                "_round_gated",
+                gate_verdicts(frontier, self.robots).observe(
+                    obs_gate,
+                    F.sum((~F.col("robots_ok")).cast("long")).alias("n"),
+                ),
             )
-            n_denied = int(obs_denied.get["n"])
+            n_denied = int(obs_gate.get["n"] or 0)
+            allowed = _gate_allowed(gated, cfg, round_no)
+            denied = gated.filter(~F.col("robots_ok")).drop("robots_ok", "delay_s")
         else:
             allowed, denied = frontier, frontier.limit(0)
             n_denied = 0
@@ -336,42 +356,14 @@ class CrawlDriver:
             selected, deferred, n_deferred = allowed, allowed.limit(0), 0
             n_selected = None  # unbounded slice — auto must not broadcast
         else:
-            budgets = None
-            if cfg.honor_crawl_delay and self.robots is not None:
-                from ..operators.robots import crawl_delay_budgets
-
-                budgets = crawl_delay_budgets(
-                    self.robots, cfg.crawl_delay_round_seconds,
-                    default_budget=cfg.host_budget,
-                    round_no=round_no,  # spreads delays > window across rounds
-                )
-            if self._rank_budgets is not None:
-                if budgets is None:
-                    budgets = self._rank_budgets
-                else:
-                    # both constraints bind: LEAST of delay & rank budgets;
-                    # a host in only one table keeps that table's budget
-                    budgets = (
-                        budgets.withColumnRenamed("budget", "__d")
-                        .join(
-                            self._rank_budgets
-                            .withColumnRenamed("budget", "__r"),
-                            "host", "outer",
-                        )
-                        .select(
-                            "host",
-                            F.least(
-                                F.coalesce("__d", "__r"),
-                                F.coalesce("__r", "__d"),
-                            ).alias("budget"),
-                        )
-                    )
             obs_rank = Observation()
             ranked = staging.write_scratch(
                 "_round_ranked",
                 rank_frontier(
                     allowed, cfg.host_budget, cfg.salt_threshold,
-                    cfg.max_salts, host_budgets=budgets,
+                    cfg.max_salts, host_budgets=self._rank_budgets,
+                    budget_col=(DELAY_BUDGET if DELAY_BUDGET in allowed.columns
+                                else None),
                 ).observe(
                     obs_rank,
                     F.sum(

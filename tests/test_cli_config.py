@@ -1,10 +1,29 @@
 """CLI ↔ config-file precedence (no Spark needed): CrawlConfig defaults <
-CLI defaults < config file < explicitly-typed CLI flags."""
+CLI defaults < config file < explicitly-typed CLI flags; then curate.py's
+stages, run in-process through ``curate.main`` on the test session (one
+test drives the ``python curate.py`` entry point as a subprocess)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
+
 import crawl
+import curate
 from distributed_crawl_spark.config_files import to_crawl_config
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _curate(spark, argv: list[str]) -> int:
+    """``curate.main(argv)`` on the active session — without ``--cores``
+    it reuses that session and sets no conf — then drop whatever it
+    left in the cache so the next test starts clean."""
+    try:
+        return curate.main(argv)
+    finally:
+        spark.catalog.clearCache()
 
 
 def _defaults():
@@ -62,17 +81,15 @@ def test_spark_section_beats_mapped_keys_but_not_explicit_cli():
     assert cfg.host_budget == 99  # typed CLI flag wins over everything
 
 
-def test_curate_cli_end_to_end(tmp_path):
+def test_curate_cli_end_to_end(tmp_path, spark):
     """curate.py: neardup + gopher + pii + split + cap over the sf0.001
     documents table — one output write, report counts consistent."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--neardup", "minhash",
@@ -80,11 +97,8 @@ def test_curate_cli_end_to_end(tmp_path):
             "--pii",
             "--split", "80,10,10",  # percentage form: normalized by sum
             "--source-cap", "50",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     assert 0 < report["n_output"] <= report["stages"]["keep_gopher"]
@@ -110,28 +124,23 @@ def test_curate_cli_end_to_end(tmp_path):
     assert not df["text"].str.contains("@").any()  # emails redacted
 
 
-def test_curate_cli_sample_scrub_report_only(tmp_path):
+def test_curate_cli_sample_scrub_report_only(tmp_path, spark):
     """curate.py new stages: seeded sampling (per-source rates), span
     scrub, --report-only (report.json but NO corpus write)."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_ro"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--sample", "0.8", "--sample-rates", "src0=0.2",
             "--scrub-spans", "20",
             "--scrub-substrings", "12:4",
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     assert 0 < report["n_output"] < 500          # sampling dropped some
@@ -142,13 +151,11 @@ def test_curate_cli_sample_scrub_report_only(tmp_path):
     assert not list(out.glob("*.parquet"))       # report-only: no corpus
 
 
-def test_curate_cli_dedup_against_mix_report(tmp_path):
+def test_curate_cli_dedup_against_mix_report(tmp_path, spark):
     """curate.py continual-crawl stages: --dedup-against a prior corpus
     (even doc_ids) drops every exact dup from the full table, and
     --mix-report adds a per-(source, split) token census of the output."""
     import json
-    import subprocess
-    import sys
 
     import duckdb
 
@@ -160,20 +167,17 @@ def test_curate_cli_dedup_against_mix_report(tmp_path):
         f"WHERE doc_id % 2 = 0) TO '{prior}' (FORMAT PARQUET)"
     )
     out = tmp_path / "curated_inc"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--dedup-against", str(prior),
             "--split", "90,5,5",
             "--mix-report",
             "--pack-tokens", "500", "--pack-writers", "4",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     # every even doc is an exact dup of the prior corpus; odd docs may
@@ -195,27 +199,22 @@ def test_curate_cli_dedup_against_mix_report(tmp_path):
     assert (df["offset_tokens"] >= 0).all()
 
 
-def test_curate_cli_dedup_lines_quantile_gate(tmp_path):
+def test_curate_cli_dedup_lines_quantile_gate(tmp_path, spark):
     """curate.py adaptive stages: --dedup-lines rewrites text first,
     --quantile-gate keeps each source's upper half (>= half with
     median ties)."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_qg"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--dedup-lines", "--quantile-gate", "0.5",
             "--out-format", "jsonl",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     assert report["n_output"] == report["stages"]["keep_quantile"]
@@ -232,29 +231,24 @@ def test_curate_cli_dedup_lines_quantile_gate(tmp_path):
     assert n_lines == report["n_output"]
 
 
-def test_curate_cli_global_line_dedup_and_lm_gate(tmp_path):
+def test_curate_cli_global_line_dedup_and_lm_gate(tmp_path, spark):
     """curate.py: --dedup-lines-global rewrites texts (exact-dup docs
     lose their lines to the first copy) and --lm-gate drops the
     lowest-fluency tail; both stage counts land in report.json."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
     out = tmp_path / "curated_gl"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--dedup-lines-global",
             "--lm-gate", "0.1",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     # lm gate keeps ~90%: percentile_approx threshold is inclusive
@@ -269,27 +263,22 @@ def test_curate_cli_global_line_dedup_and_lm_gate(tmp_path):
     assert (df["text"] == "").any() or df["text"].duplicated().sum() == 0
 
 
-def test_curate_cli_mix_weights(tmp_path):
+def test_curate_cli_mix_weights(tmp_path, spark):
     """curate.py --mix-weights: sample rates derived from mix_plan (the
     bottleneck source at 100%), plan recorded in report.json, and the
     realized per-source doc counts follow the planned rates."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_mix"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--mix-weights", "src0=5,src1=0",
             "--mix-report", "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     plan = {p["source"]: p for p in report["mix_plan"]}
     assert len(plan) == 20                      # every source planned
@@ -302,42 +291,35 @@ def test_curate_cli_mix_weights(tmp_path):
     assert report["n_output"] == sum(mix.values())
 
 
-def test_curate_cli_script_and_lang_gates(tmp_path):
+def test_curate_cli_script_and_lang_gates(tmp_path, spark):
     """--keep-script / --keep-lang flag stages wire through: the ASCII
     corpus is all-Latin (script keeps everything) while the word-soup
     texts mostly lack 'en' markers (lang gate drops most)."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_script"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--keep-script", "latin",
             "--keep-lang", "en",
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_script"] == 500
     assert report["stages"]["keep_lang"] < 500
     assert report["n_output"] <= report["stages"]["keep_lang"]
 
 
-def test_curate_cli_write_index_then_probe(tmp_path):
+def test_curate_cli_write_index_then_probe(tmp_path, spark):
     """Continual-crawl loop via a persisted index: run A curates the
     even-doc prior corpus and writes its dedup index; run B probes the
     full table against that index WITHOUT reading the prior corpus —
     every even doc (exact dup) drops, matching --dedup-against."""
     import json
-    import subprocess
-    import sys
 
     import duckdb
 
@@ -348,90 +330,74 @@ def test_curate_cli_write_index_then_probe(tmp_path):
         f"WHERE doc_id % 2 = 0) TO '{prior}' (FORMAT PARQUET)"
     )
     out_a, idx = tmp_path / "outA", tmp_path / "index"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(prior), "--out", str(out_a),
             "--write-index", str(idx),
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     rep_a = json.loads((out_a / "report.json").read_text())
     assert rep_a["index_entries"] > 250          # digests + band keys
 
     out_b = tmp_path / "outB"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out_b),
             "--dedup-against-index", str(idx),
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     rep_b = json.loads((out_b / "report.json").read_text())
     assert rep_b["n_input"] == 500
     assert 0 < rep_b["n_output"] <= 250          # all evens are exact dups
     assert rep_b["n_output"] == rep_b["stages"]["keep_prior"]
 
 
-def test_curate_cli_semdedup(tmp_path):
+def test_curate_cli_semdedup(tmp_path, spark):
     """curate.py --semdedup drops non-canonical members of semantic
     near-identical groups (12 at sf0.001/threshold 0.4); docs without
     an embedding are kept."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_sd"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--semdedup", "/root/testdata/sf0.001/embeddings.parquet",
             "--semdedup-threshold", "0.4",
             "--semdedup-cells", "32",
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     assert report["stages"]["keep_semdedup"] == 488   # 12 semantic dups
     assert report["n_output"] == 488
 
 
-def test_curate_cli_diff_against(tmp_path):
+def test_curate_cli_diff_against(tmp_path, spark):
     """--diff-against: report gains the refresh census — docs the gate
     dropped read as 'removed', survivors as 'same' (no text rewrite
     stages enabled)."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_diff"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--sample", "0.8",
             "--diff-against",
             "/root/testdata/sf0.001/documents.parquet",
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     diff = report["diff"]
     assert diff["same"] == report["n_output"]
@@ -444,8 +410,6 @@ def test_curate_cli_normalize_nfc(tmp_path, spark):
     a previously-published (composed) doc collides in the
     --dedup-against digest stage, and the surviving text is NFC."""
     import json
-    import subprocess
-    import sys
     import unicodedata
 
     import pandas as pd
@@ -467,16 +431,13 @@ def test_curate_cli_normalize_nfc(tmp_path, spark):
         }
     ).to_parquet(docs)
     out = tmp_path / "curated_nfc"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs), "--out", str(out),
             "--normalize-nfc", "--dedup-against", str(prior),
-            "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 2 and report["n_output"] == 1
     df = pd.concat(
@@ -486,47 +447,37 @@ def test_curate_cli_normalize_nfc(tmp_path, spark):
     assert all(unicodedata.is_normalized("NFC", t) for t in df.text)
 
 
-def test_curate_cli_jsonl_roundtrip(tmp_path):
+def test_curate_cli_jsonl_roundtrip(tmp_path, spark):
     """curate.py round-trips its own jsonl interchange: a corpus exported
     with --out-format jsonl re-enters via --docs-format jsonl."""
     import json
-    import subprocess
-    import sys
 
     out1 = tmp_path / "stage1"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out1), "--out-format", "jsonl",
             "--sample", "0.5",
-            "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     n1 = json.loads((out1 / "report.json").read_text())["n_output"]
 
     out2 = tmp_path / "stage2"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(out1 / "*.json.gz"), "--docs-format", "jsonl",
             "--out", str(out2), "--report-only",
-            "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     assert json.loads((out2 / "report.json").read_text())["n_input"] == n1
 
 
-def test_curate_cli_boilerplate(tmp_path):
+def test_curate_cli_boilerplate(tmp_path, spark):
     """curate.py --boilerplate: host-scoped chrome lines vanish from the
     output texts while per-doc body lines survive."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -540,17 +491,14 @@ def test_curate_cli_boilerplate(tmp_path):
         }
     ).to_parquet(src)
     out = tmp_path / "curated_bp"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(src),
             "--out", str(out),
             "--boilerplate",
-            "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 6 and report["n_output"] == 6
     df = pd.concat(
@@ -561,12 +509,10 @@ def test_curate_cli_boilerplate(tmp_path):
     ]
 
 
-def test_curate_cli_fix_mojibake(tmp_path):
+def test_curate_cli_fix_mojibake(tmp_path, spark):
     """curate.py --fix-mojibake repairs double-encoded text before any
     downstream stage (digest dedup sees the clean form)."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -584,57 +530,47 @@ def test_curate_cli_fix_mojibake(tmp_path):
         {"doc_id": [99], "source": ["a"], "text": ["naïve café body"]}
     ).to_parquet(prior)
     out = tmp_path / "curated_fix"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(src),
             "--out", str(out),
             "--fix-mojibake",
             # prior holds only the CLEAN text: doc 2 survives the digest
             # anti-join unless the repair ran first
             "--dedup-against", str(prior),
-            "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 2 and report["n_output"] == 0
 
 
-def test_curate_cli_classifier_gate(tmp_path):
+def test_curate_cli_classifier_gate(tmp_path, spark):
     """curate.py --classifier-gate: the model gate's keep count lands in
     report.json and the output matches the stage count."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_cg"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--classifier-gate", "0",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 500
     assert report["stages"]["keep_classifier"] == report["n_output"]
     assert 0 < report["n_output"] < 500
 
 
-def test_curate_cli_blocklist_ccnet(tmp_path):
+def test_curate_cli_blocklist_ccnet(tmp_path, spark):
     """curate.py URL + fluency gates: --blocklist drops docs whose url
     host matches a listed domain (subdomain included), --ccnet-keep
     drops the per-language tail perplexity bucket; stage counts are
     independent, the output is the intersection."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -657,17 +593,14 @@ def test_curate_cli_blocklist_ccnet(tmp_path):
     bl.write_text("bad.example,adult\n")
 
     out = tmp_path / "curated_bl"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
             "--blocklist", str(bl), "--blocklist-url-col", "url",
             "--ccnet-keep", "head,middle", "--ccnet-lang-col", "lang",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_blocklist"] == 24   # i%5==0 blocked
     assert report["stages"]["keep_ccnet"] == 20       # tail third dropped
@@ -681,12 +614,10 @@ def test_curate_cli_blocklist_ccnet(tmp_path):
     assert got == expect
 
 
-def test_curate_cli_dedup_exact_normalized(tmp_path):
+def test_curate_cli_dedup_exact_normalized(tmp_path, spark):
     """curate.py --dedup-exact normalized: trivial case/digit/punct
     variants collapse to one kept doc per class."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -699,15 +630,13 @@ def test_curate_cli_dedup_exact_normalized(tmp_path):
         "source": ["s"] * 6,
     }).to_parquet(docs_path)
     out = tmp_path / "deduped"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
-            "--dedup-exact", "normalized", "--cores", "4",
+            "--dedup-exact", "normalized",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_exact"] == 3
     import duckdb
@@ -719,12 +648,10 @@ def test_curate_cli_dedup_exact_normalized(tmp_path):
     assert got == {0, 2, 4}
 
 
-def test_curate_cli_classifier_train(tmp_path):
+def test_curate_cli_classifier_train(tmp_path, spark):
     """curate.py --classifier-train POS:NEG trains the hashed linear
     model in-run, gates with it, and --save-classifier round-trips."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -746,19 +673,16 @@ def test_curate_cli_classifier_train(tmp_path):
                   "source": ["s"] * 20}).to_parquet(tmp_path / "docs.parquet")
 
     out = tmp_path / "curated_clf"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(tmp_path / "docs.parquet"), "--out", str(out),
             "--classifier-gate", "0",
             "--classifier-train",
             f"{tmp_path}/pos.parquet:{tmp_path}/neg.parquet",
             "--save-classifier", str(tmp_path / "w" / "clf"),
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_classifier"] == 10   # bad-vocab half out
     import duckdb
@@ -774,12 +698,10 @@ def test_curate_cli_classifier_train(tmp_path):
     assert n_w > 0
 
 
-def test_curate_cli_c4(tmp_path):
+def test_curate_cli_c4(tmp_path, spark):
     """curate.py --c4: banner/short lines removed from surviving docs,
     brace/min-lines docs dropped, later stages see the cleaned text."""
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -796,15 +718,13 @@ def test_curate_cli_c4(tmp_path):
         "source": ["s"] * 3,
     }).to_parquet(docs_path)
     out = tmp_path / "c4"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
-            "--c4", "--cores", "4",
+            "--c4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_c4"] == 1
     import duckdb
@@ -815,14 +735,11 @@ def test_curate_cli_c4(tmp_path):
     assert "javascript" not in rows[0][1]     # banner line scrubbed
 
 
-def test_curate_cli_watch_mode(tmp_path):
+def test_curate_cli_watch_mode(tmp_path, spark):
     """curate.py --watch: drains a parquet drop-dir through the
     streaming gate stack into appended parquet; a second invocation
     after more files land processes ONLY the new docs (exactly-once via
     the stream checkpoint)."""
-    import subprocess
-    import sys
-
     import duckdb
     import pandas as pd
 
@@ -840,15 +757,13 @@ def test_curate_cli_watch_mode(tmp_path):
     out = tmp_path / "curated_watch"
 
     def run():
-        r = subprocess.run(
+        assert _curate(
+            spark,
             [
-                sys.executable, "curate.py",
                 "--docs", str(drop), "--out", str(out),
-                "--watch", "--c4", "--cores", "4",
+                "--watch", "--c4",
             ],
-            capture_output=True, text=True, cwd="/root/repo", timeout=400,
-        )
-        assert r.returncode == 0, r.stderr[-2000:]
+        ) == 0
 
     land(range(6), "a.parquet")
     run()
@@ -864,9 +779,6 @@ def test_curate_cli_watch_mode(tmp_path):
 def test_curate_cli_watch_wet(spark, tmp_path):
     """--watch --out-format wet: the drained stream publishes WET
     batch segments readable by read_wet."""
-    import subprocess
-    import sys
-
     import pandas as pd
 
     drop = tmp_path / "drop_w"
@@ -877,15 +789,13 @@ def test_curate_cli_watch_wet(spark, tmp_path):
         "source": ["s"] * 5,
     }).to_parquet(drop / "a.parquet")
     out = tmp_path / "wet_watch"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(drop), "--out", str(out),
-            "--watch", "--out-format", "wet", "--cores", "4",
+            "--watch", "--out-format", "wet",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     import duckdb
 
     from distributed_crawl_spark.sources.warc import read_wet
@@ -902,13 +812,11 @@ def test_curate_cli_watch_wet(spark, tmp_path):
     assert n == 5
 
 
-def test_curate_cli_bpe_train(tmp_path):
+def test_curate_cli_bpe_train(tmp_path, spark):
     """curate.py --bpe-train: merges learned on the post-gate corpus
     land in report.json + --save-merges parquet, and the output gains
     an exact n_bpe_tokens column."""
     import json
-    import subprocess
-    import sys
 
     import duckdb
     import pandas as pd
@@ -920,16 +828,13 @@ def test_curate_cli_bpe_train(tmp_path):
         "source": ["s"] * 12,
     }).to_parquet(docs_path)
     out = tmp_path / "bpe_out"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
             "--bpe-train", "6", "--save-merges", str(tmp_path / "merges"),
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert len(report["bpe_merges"]) == 6
     rows = duckdb.sql(
@@ -945,27 +850,22 @@ def test_curate_cli_bpe_train(tmp_path):
     assert m == 6
 
 
-def test_curate_cli_chunk_output(tmp_path):
+def test_curate_cli_chunk_output(tmp_path, spark, capsys):
     """curate.py --chunk: gates compose upstream, the output rows ARE
     chunks (id, chunk_idx, n_tokens, chunk), chunk token counts respect
     the window, and document-shaped stages are rejected loudly."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "chunks"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--gopher", "--gopher-stopwords", "a,the,and,is,of,to,in,that,it",
             "--chunk", "32:24",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
 
     import duckdb
@@ -983,39 +883,32 @@ def test_curate_cli_chunk_output(tmp_path):
             == df["doc_id"].nunique() == report["stages"]["keep_gopher"])
 
     # document-shaped stages are rejected
-    r2 = subprocess.run(
-        [
-            sys.executable, "curate.py",
+    capsys.readouterr()
+    with pytest.raises(SystemExit) as exc:
+        _curate(spark, [
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(tmp_path / "bad"),
             "--chunk", "32", "--pack-tokens", "2048",
-        ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert r2.returncode != 0 and "--pack-tokens" in r2.stderr
+        ])
+    assert exc.value.code != 0 and "--pack-tokens" in capsys.readouterr().err
 
 
-def test_curate_cli_lang_mix_report(tmp_path):
+def test_curate_cli_lang_mix_report(tmp_path, spark):
     """--lang-mix-report: per-source language-mix stats land in
     report.json; with --ccnet-lang-col the table's OWN lang column is
     censused (exact counts, no lang_id prediction)."""
     import json
-    import subprocess
-    import sys
 
     out = tmp_path / "curated_lm"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", "/root/testdata/sf0.001/documents.parquet",
             "--out", str(out),
             "--lang-mix-report", "--ccnet-lang-col", "lang",
             "--report-only",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     lm = report["lang_mix"]
     assert [x["host"] for x in lm] == sorted({x["host"] for x in lm})
@@ -1025,12 +918,10 @@ def test_curate_cli_lang_mix_report(tmp_path):
         assert (x["lang_entropy_micro"] == 0) == (x["n_langs"] == 1)
 
 
-def test_curate_cli_drop_contained(tmp_path):
+def test_curate_cli_drop_contained(tmp_path, spark):
     """--drop-contained: one-way quotes are dropped, their source pages
     survive, mutual (exact-dup) pairs keep the min id."""
     import json
-    import subprocess
-    import sys
 
     import duckdb
 
@@ -1055,17 +946,14 @@ def test_curate_cli_drop_contained(tmp_path):
     con.execute(f"COPY d TO '{src}' (FORMAT PARQUET)")
 
     out = tmp_path / "curated"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(src),
             "--out", str(out),
             "--drop-contained", "0.8",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["n_input"] == 17
     assert report["stages"]["keep_contained"] == 11  # -5 quotes, -1 dup
@@ -1081,7 +969,8 @@ def test_curate_cli_drop_contained(tmp_path):
 
 def test_curate_cli_drop_soft404(tmp_path):
     """curate.py --drop-soft404: short error-phrase pages dropped, a
-    long page containing a phrase kept, clean pages kept."""
+    long page containing a phrase kept, clean pages kept. Runs the
+    ``python curate.py`` entry point as a subprocess."""
     import json
     import subprocess
     import sys
@@ -1107,7 +996,7 @@ def test_curate_cli_drop_soft404(tmp_path):
             "--docs", str(docs_path), "--out", str(out),
             "--drop-soft404", "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
+        capture_output=True, text=True, cwd=REPO, timeout=400,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     report = json.loads((out / "report.json").read_text())
@@ -1119,13 +1008,11 @@ def test_curate_cli_drop_soft404(tmp_path):
     assert kept == [2, 3]
 
 
-def test_curate_cli_drop_templates(tmp_path):
+def test_curate_cli_drop_templates(tmp_path, spark):
     """curate.py --drop-templates: docs matching a learned error-template
     digest table are dropped at ingest; everything else passes."""
     import hashlib
     import json
-    import subprocess
-    import sys
 
     import pandas as pd
 
@@ -1144,15 +1031,13 @@ def test_curate_cli_drop_templates(tmp_path):
         "template_digest": [hashlib.md5(template.encode()).hexdigest()],
     }).to_parquet(learned)
     out = tmp_path / "tdrop"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
-            "--drop-templates", str(learned), "--cores", "4",
+            "--drop-templates", str(learned),
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     report = json.loads((out / "report.json").read_text())
     assert report["stages"]["keep_template"] == 2
     import duckdb
@@ -1162,13 +1047,10 @@ def test_curate_cli_drop_templates(tmp_path):
     assert kept == [2, 3]
 
 
-def test_curate_cli_split_clusters(tmp_path):
+def test_curate_cli_split_clusters(tmp_path, spark):
     """curate.py --split --split-clusters: a near-dup pair whose ids a
     plain hash split would separate (doc 0 -> train, doc 4 -> test)
     lands on ONE side because the component id hashes instead."""
-    import subprocess
-    import sys
-
     import pandas as pd
 
     twin = ("the quick brown fox jumps over the lazy dog again and "
@@ -1185,16 +1067,13 @@ def test_curate_cli_split_clusters(tmp_path):
         "doc_id": range(8), "text": texts, "source": ["s"] * 8,
     }).to_parquet(docs_path)
     out = tmp_path / "cs"
-    r = subprocess.run(
+    assert _curate(
+        spark,
         [
-            sys.executable, "curate.py",
             "--docs", str(docs_path), "--out", str(out),
             "--split", "0.9,0.05,0.05", "--split-clusters",
-            "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
+    ) == 0
     import duckdb
     rows = dict(duckdb.sql(
         f"SELECT doc_id, split FROM read_parquet('{out}/*.parquet')"

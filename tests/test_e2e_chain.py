@@ -17,6 +17,9 @@ import gzip
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _rec(url: str, body: bytes) -> bytes:
@@ -87,7 +90,7 @@ def test_warc_crawl_to_wet_curation_chain(spark, tmp_path):
             "--export-wet", "2",
             "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=500,
+        capture_output=True, text=True, cwd=REPO, timeout=500,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     summary = json.loads((exp / "summary.json").read_text())
@@ -115,7 +118,7 @@ def test_warc_crawl_to_wet_curation_chain(spark, tmp_path):
             "--out-format", "wet",
             "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=500,
+        capture_output=True, text=True, cwd=REPO, timeout=500,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     report = json.loads((out / "report.json").read_text())

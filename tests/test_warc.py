@@ -4,12 +4,15 @@ and end-to-end crawl over a WARC-sourced pages table."""
 from __future__ import annotations
 
 import gzip
+from pathlib import Path
 
 from distributed_crawl_spark.sources.warc import (
     iter_warc_records,
     read_warc,
     warc_pages,
 )
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _record(url: str, body: bytes, warc_type: str = "response",
@@ -224,7 +227,7 @@ def test_curate_cli_over_wet(spark, tmp_path):
             "--neardup", "minhash",
             "--cores", "2",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
+        capture_output=True, text=True, cwd=REPO, timeout=400,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     report = json.loads((out / "report.json").read_text())
@@ -542,7 +545,7 @@ def test_curate_cli_out_format_wet(spark, tmp_path):
             "--docs", str(docs_path), "--out", str(out),
             "--out-format", "wet", "--cores", "4",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=400,
+        capture_output=True, text=True, cwd=REPO, timeout=400,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     report = json.loads((out / "report.json").read_text())
