@@ -432,15 +432,12 @@ def decontaminate_semantic(corpus_vecs: DataFrame, bench_vecs: DataFrame,
     but sits next to the original in embedding space).
 
     Plan shape for 100 TB: a benchmark suite is tiny next to the corpus
-    (10^3–10^5 vectors), so it is collapsed to ONE row
-    (``collect_list(struct(id, vec))``) and cross-joined — the bounded
-    1-row broadcast-nested-loop pattern PLANS.md documents for
-    ``mix_plan``. The corpus side never shuffles: per-row work is
-    |bench| whole-stage-codegen dot products (``transform`` over the
-    broadcast array + ``array_max``), embarrassingly parallel, zero
-    exchanges. Scores are floor-quantized to cosine milli-units BEFORE
-    the argmax so the (score, tie-break) order is integer-exact and
-    hash-stable; ties pick the smallest benchmark id.
+    (10^3–10^5 vectors), so it is broadcast whole and the corpus side
+    never shuffles: per-row work is |bench| dot products,
+    embarrassingly parallel, zero exchanges. Scores are floor-quantized
+    to cosine milli-units BEFORE the argmax so the (score, tie-break)
+    order is integer-exact and hash-stable; ties pick the smallest
+    benchmark id.
 
     Returns one row per corpus vector:
     (id_col, best_bench_id, best_cos_m, contaminated).
@@ -449,18 +446,16 @@ def decontaminate_semantic(corpus_vecs: DataFrame, bench_vecs: DataFrame,
     Catalyst ``transform`` + ``array_max`` over the broadcast struct
     array evaluated |bench| *interpreted* higher-order dots per corpus
     row; the kernel broadcasts the (tiny) bench matrix once and scores
-    each Arrow batch with the same ordered-summation numpy kernel the
-    bitext family uses: the dot matrix accumulates dimension-by-
-    dimension (one IEEE multiply + one IEEE add per term, left to
-    right — the zip_with/aggregate fold's exact op order), then
-    divide / scale / floor in the fold's op sequence, so every cos_m
-    and the (cos_m, smallest-bid) argmax are bit-identical to the
-    Catalyst form the DuckDB oracle mirrors. Zero exchanges either way.
+    each Arrow batch through the similarity module's ordered fold
+    (_np_dots, _np_ordered_norms: the zip_with/aggregate fold's exact
+    op order), then divide / scale / floor in the fold's op sequence,
+    so every cos_m and the (cos_m, smallest-bid) argmax are
+    bit-identical to the Catalyst form the DuckDB oracle mirrors.
     """
     import numpy as np
     import pandas as pd
 
-    from .similarity import _np_ordered_norms, as_double
+    from .similarity import _np_dots, _np_matrix, _np_ordered_norms, as_double
 
     spark = corpus_vecs.sparkSession
     bp = bench_vecs.select(
@@ -469,7 +464,7 @@ def decontaminate_semantic(corpus_vecs: DataFrame, bench_vecs: DataFrame,
     ).toPandas()
     b_ids = bp["bid"].to_numpy(np.int64)
     if len(bp):
-        B = np.array(bp["bv"].tolist(), dtype=np.float64)
+        B = _np_matrix(bp["bv"])
         bn = _np_ordered_norms(B)
     else:  # empty suite → null best/flag per row, like array_max([])
         B = np.zeros((0, 0))
@@ -491,16 +486,11 @@ def decontaminate_semantic(corpus_vecs: DataFrame, bench_vecs: DataFrame,
                     "contaminated": pd.array([None] * len(pdf), dtype="boolean"),
                 })
                 continue
-            A = np.array(pdf["__v"].tolist(), dtype=np.float64)
+            A = _np_matrix(pdf["__v"])
             an = _np_ordered_norms(A)
-            P = np.zeros((A.shape[0], B.shape[0]))
-            for d in range(A.shape[1]):
-                # one IEEE multiply + one IEEE add per term — the fold's
-                # (acc, x) -> acc + x over zip_with products
-                P += A[:, d : d + 1] * B[None, :, d]
-            cs = np.floor(P / (an[:, None] * bn[None, :]) * 1000.0).astype(
-                np.int64
-            )
+            cs = np.floor(
+                _np_dots(A, B) / (an[:, None] * bn[None, :]) * 1000.0
+            ).astype(np.int64)
             best = cs.max(axis=1)
             bid = np.where(
                 cs == best[:, None], b_ids[None, :], np.iinfo(np.int64).max

@@ -4,8 +4,9 @@ Three tiers, all pure DataFrame plans:
 
 - **brute-force cosine top-k** — the correctness baseline. Query set joins
   the candidate set (broadcast when the query side is small, the usual
-  case), cosine computed JVM-side with higher-order array functions
-  (zip_with + aggregate → whole-stage codegen, no Python), ranked with a
+  case), cosine computed JVM-side as the zip_with + aggregate ordered
+  fold (no Python; the fold is interpreted — CodegenFallback — so its
+  Project runs outside the whole-stage codegen stage), ranked with a
   window. Cost O(|Q| × N) — fine for |Q| small even at huge N because the
   candidate side streams.
 
@@ -33,10 +34,10 @@ Common-Crawl-scale corpora).
 
 from __future__ import annotations
 
-from functools import lru_cache as _lru_cache
-
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 N_PLANES = 8  # LSH hyperplanes → 256 buckets
 
@@ -67,42 +68,118 @@ def _lsh_params(preset: str | None, n_planes: int, n_tables: int) -> tuple[int, 
 def as_double(vec: Column) -> Column:
     """Cast array<float> → array<double> so all math is f64 (matches the
     oracle; float32 partial sums would diverge)."""
-    return F.transform(vec, lambda x: x.cast("double"))
+    return vec.cast("array<double>")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product via zip_with + aggregate — JVM codegen, sequential
-    left-to-right summation (deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+# The ONE summation order every vector operator shares, in SQL text:
+# term by term over the zipped arrays, left to right from 0.0. Spark
+# evaluates the fold interpreted (zip_with/aggregate are CodegenFallback,
+# so their Project sits outside the whole-stage codegen stage); the
+# DuckDB oracle's list_sum(list_transform) and the numpy kernels below
+# (_np_dots, _np_row_dots) add in the same order, so all three agree
+# bit for bit.
+_FOLD = ("aggregate(zip_with(`{a}`, `{b}`, (x, y) -> {term}), "
+         "CAST(0 AS DOUBLE), (acc, t) -> acc + t)")
 
 
-@_lru_cache(maxsize=256)
-def _dot_cols(a_name: str, b_name: str) -> Column:
-    """`dot` over two NAMED columns, memoized: building the
-    higher-order expression costs ~60 py4j round-trips, and the ivf
-    family re-builds the same (qv, cv)-style trees on every plan
-    construction. Column expression trees are immutable and resolve by
-    name at analysis, so one cached instance serves every plan in the
-    process."""
-    return dot(F.col(a_name), F.col(b_name))
+def dot(a: str, b: str) -> Column:
+    """Dot product of two NAMED array<double> columns as the ordered
+    fold (deterministic left-to-right summation)."""
+    return F.expr(_FOLD.format(a=a, b=b, term="x * y"))
 
 
-def norm(a: Column) -> Column:
+def norm(a: str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-@_lru_cache(maxsize=256)
-def _norm_col(name: str) -> Column:
-    """Memoized :func:`norm` over a NAMED column (see _dot_cols)."""
-    return norm(F.col(name))
-
-
-def cosine(a: Column, b: Column) -> Column:
+def cosine(a: str, b: str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def l2sq(a: str, b: str) -> Column:
+    """Squared Euclidean distance of two NAMED columns as the ordered
+    fold — the summation order of the DuckDB oracle's
+    list_sum(list_transform), so cross-engine argmin comparisons see
+    identical bits."""
+    return F.expr(_FOLD.format(a=a, b=b, term="(x - y) * (x - y)"))
+
+
+# ---- the same fold in numpy, for the Arrow kernels -------------------------
+#
+# numpy's own reductions (pairwise summation, BLAS) round differently, so
+# no kernel calls them for a dot or a distance. These loops add one term
+# per dimension, left to right: one IEEE multiply (or subtract + multiply)
+# and one IEEE add per term, the op sequence of _FOLD. Every kernel
+# below accumulates through them and keeps no loop of its own.
+
+def _np_matrix(values) -> np.ndarray:
+    """A pandas column of equal-length vectors as an (n, dim) f64 matrix."""
+    return np.array(values.tolist(), dtype=np.float64)
+
+
+def _np_row_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row by row ``dot``: out[i] = Σ_d A[i,d]·B[i,d], left to right."""
+    acc = np.zeros(A.shape[0])
+    for d in range(A.shape[1]):
+        acc = acc + A[:, d] * B[:, d]
+    return acc
+
+
+def _np_ordered_norms(M: np.ndarray) -> np.ndarray:
+    """Row norms, bit-identical to ``norm()``."""
+    return np.sqrt(_np_row_dots(M, M))
+
+
+def _np_dots(A: np.ndarray, B: np.ndarray, l2: bool = False) -> np.ndarray:
+    """All pairs, shape (len(A), len(B)): ``dot(A[i], B[j])``, or
+    ``l2sq(A[i], B[j])`` when ``l2``."""
+    P = np.zeros((A.shape[0], B.shape[0]))
+    for d in range(A.shape[1]):
+        a, b = A[:, d : d + 1], B[None, :, d]
+        if l2:
+            a = b = a - b
+        P += a * b
+    return P
+
+
+def _np_codebooks(codebooks: DataFrame, m: int) -> list[np.ndarray]:
+    """The (sub, code_id, centroid) table as ``m`` (k, d0) matrices with
+    rows in code_id order, so a first-min argmin picks the smallest
+    code_id, the (d, code_id) min_by tie-break of :func:`_pq_best`."""
+    cbp = codebooks.select(
+        F.col("sub").cast("int").alias("sub"),
+        F.col("code_id").cast("int").alias("code_id"),
+        as_double(F.col("centroid")).alias("c"),
+    ).toPandas().sort_values(["sub", "code_id"])
+    return [_np_matrix(cbp[cbp["sub"] == j]["c"]) for j in range(m)]
+
+
+def _np_pq_codes(A: np.ndarray, CB: list[np.ndarray], d0: int) -> np.ndarray:
+    """(n, m) PQ codes: per subspace j, the ordered-L2² argmin of row
+    slice j over codebook ``CB[j]`` — :func:`_pq_best`'s code_id."""
+    codes = np.empty((A.shape[0], len(CB)), dtype=np.int64)
+    for j, Bs in enumerate(CB):
+        D = _np_dots(A[:, j * d0 : (j + 1) * d0], Bs, l2=True)
+        codes[:, j] = np.argmin(D, axis=1)  # first min = min code_id
+    return codes
+
+
+def _cos_m(scale: int) -> Column:
+    """Floor-scaled integer cosine (floor is hash-stable across engines)."""
+    return F.floor(F.col("cos") * scale).cast("long").alias("cos_m")
+
+
+def _top_k(scored: DataFrame, k: int, order: Column,
+           value: Column | str) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` by ``order``, ties
+    broken by vec_id ascending. Returns (query_id, vec_id, rank, value).
+    """
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "rank", value)
+    )
 
 
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
@@ -116,26 +193,19 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     Ties break on candidate id ascending (deterministic).
     Returns (query_id, vec_id, rank, cos).
     """
-    from pyspark.sql.window import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm_col("qv"))
+    ).withColumn("qn", norm("qv"))
     c = vectors.select(
         F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm_col("cv"))
+    ).withColumn("cn", norm("cv"))
     scored = (
         c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         # norms hoisted to each side — one dot per scored pair, and
         # dot/(qn*cn) is bit-identical to cosine(qv, cv)
-        .withColumn("cos", _dot_cols("qv", "cv") / (F.col("qn") * F.col("cn")))
+        .withColumn("cos", dot("qv", "cv") / (F.col("qn") * F.col("cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", F.floor(F.col("cos") * scale).cast("long").alias("cos_m"))
-    )
+    return _top_k(scored, k, F.desc("cos"), _cos_m(scale))
 
 
 def plane_component(j: int, d: int, table: int = 0) -> int:
@@ -158,23 +228,6 @@ def plane_matrix(n_planes: int, dim: int, table: int = 0) -> list[list[int]]:
     ]
 
 
-def lsh_bucket(vec: Column, dim: int, n_planes: int = N_PLANES,
-               table: int = 0) -> Column:
-    """Random-hyperplane bucket id: bit j = sign(v · plane_j).
-
-    The plane matrix is baked in as literal arrays (it's tiny and
-    deterministic), so the bucket is a closed-form zip_with/aggregate over
-    the row — no join, no shuffle, embarrassingly parallel, codegen'd.
-    """
-    planes = plane_matrix(n_planes, dim, table)
-    bucket = F.lit(0).cast("long")
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[j]])
-        proj = dot(vec, plane)
-        bucket = bucket + F.when(proj > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0))
-    return bucket
-
-
 def _bucket_tagged(df: DataFrame, id_alias: str, vec_alias: str,
                    id_col: str, vec_col: str, dim: int, n_planes: int,
                    n_tables: int) -> DataFrame:
@@ -192,18 +245,17 @@ def _bucket_tagged(df: DataFrame, id_alias: str, vec_alias: str,
     Physical form (round 6): an Arrow ``mapInPandas`` kernel — the
     T×P plane projections and the norm were interpreted higher-order
     dot products per row (24 of them at the 'balanced' preset) and
-    dominated both LSH queries' walls.  The numpy kernel accumulates
-    every projection dimension-by-dimension in the fold's IEEE order
-    (see _np_cs_matrix), so each projection's sign — and therefore
-    every bucket id — and the norms are bit-identical.
+    dominated both LSH queries' walls.  The numpy kernel projects and
+    takes norms through the shared ordered fold (_np_dots,
+    _np_ordered_norms), so each projection's sign — and therefore every
+    bucket id — and the norms are bit-identical.
     """
-    import numpy as np
     import pandas as pd
 
     W = np.array(
         [plane_matrix(n_planes, dim, t) for t in range(n_tables)],
         dtype=np.float64,
-    )  # (T, P, dim) — integer-valued, exact in f64
+    ).reshape(n_tables * n_planes, dim)  # integer-valued, exact in f64
     id_t = df.schema[id_col].dataType.simpleString()
     pow2 = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
 
@@ -211,25 +263,19 @@ def _bucket_tagged(df: DataFrame, id_alias: str, vec_alias: str,
         for pdf in it:
             if not len(pdf):
                 continue
-            A = np.array(pdf["__v"].tolist(), dtype=np.float64)
+            A = _np_matrix(pdf["__v"])[:, :dim]  # the planes' dimensions
             n = A.shape[0]
-            acc = np.zeros(n)
-            proj = np.zeros((n_tables, n_planes, n))
-            for d in range(dim):
-                c = A[:, d]
-                acc = acc + c * c                      # ordered, = norm()
-                proj += W[:, :, None, d] * c[None, None, :]  # ordered dot
-            norms = np.sqrt(acc)
+            norms = _np_ordered_norms(A)
+            proj = _np_dots(A, W).reshape(n, n_tables, n_planes)
             # bucket_t = Σ_j 2^j [proj_tj > 0] — order-free integer sum
-            buckets = ((proj > 0).astype(np.int64)
-                       * pow2[None, :, None]).sum(axis=1)  # (T, n)
+            buckets = ((proj > 0).astype(np.int64) * pow2).sum(axis=2)
             ids = pdf["__id"].to_numpy()
             out = {
                 id_alias: np.tile(ids, n_tables),
                 vec_alias: list(pdf["__v"]) * n_tables,
                 f"{vec_alias}_n": np.tile(norms, n_tables),
                 "tbl": np.repeat(np.arange(n_tables, dtype=np.int32), n),
-                "bucket": buckets.reshape(-1),
+                "bucket": buckets.T.reshape(-1),  # table-major, as tbl
             }
             yield pd.DataFrame(out)
 
@@ -258,8 +304,6 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     picks a measured (planes, tables) point from :data:`LSH_PRESETS`.
     Returns (query_id, vec_id, rank, cos).
     """
-    from pyspark.sql.window import Window
-
     n_planes, n_tables = _lsh_params(preset, n_planes, n_tables)
     q = _bucket_tagged(
         queries, "query_id", "qv", id_col, vec_col, dim, n_planes, n_tables
@@ -274,19 +318,14 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         # to the tagged rows so each pair pays ONE dot product
         .withColumn(
             "cos",
-            _dot_cols("qv", "cv") / (F.col("qv_n") * F.col("cv_n")),
+            dot("qv", "cv") / (F.col("qv_n") * F.col("cv_n")),
         )
     )
     if n_tables > 1:  # same pair from several tables → score once
         scored = scored.groupBy("query_id", "vec_id").agg(
             F.max("cos").alias("cos")
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", F.floor(F.col("cos") * scale).cast("long").alias("cos_m"))
-    )
+    return _top_k(scored, k, F.desc("cos"), _cos_m(scale))
 
 
 def seed_centroids(vectors: DataFrame, n_cells: int,
@@ -382,8 +421,8 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, nprobe: int = 1,
       fan-out + ``max_by`` ARGMAX AGGREGATION. The K-per-vector rows are
       collapsed by partial (map-side) aggregation before any exchange,
       so the one shuffle carries N rows — never the N×K that the
-      row_number window pushed through a vec_id-keyed exchange — and the
-      per-pair cosine stays in codegen. Measured at sf0.1: 0.4-1.0s vs
+      row_number window pushed through a vec_id-keyed exchange; the
+      per-pair cosine is one interpreted fold. Measured at sf0.1: 0.4-1.0s vs
       1.5-4.4s for the window form and 2.6-3.7s for a zero-shuffle
       literal-codebook projection (K nested higher-order lambdas per row
       drop to interpreted evaluation — "no shuffle" lost to a 10×
@@ -395,16 +434,16 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, nprobe: int = 1,
     """
     v = vectors.select(
         F.col(id_col).alias(out_id), as_double(F.col(vec_col)).alias(out_vec)
-    ).withColumn("_vn", _norm_col(out_vec))
+    ).withColumn("_vn", norm(out_vec))
     # hoisted norms: one norm per vector row and one per centroid row
     # instead of per (vector, centroid) pair; dot/(_vn*_cn) is
     # bit-identical to cosine(v, centroid)
     cent = centroids.select(
-        "cell_id", "centroid", _norm_col("centroid").alias("_cn")
+        "cell_id", "centroid", norm("centroid").alias("_cn")
     )
     scored = v.crossJoin(F.broadcast(cent)).withColumn(
         "ccos",
-        _dot_cols(out_vec, "centroid")
+        dot(out_vec, "centroid")
         / (F.col("_vn") * F.col("_cn")),
     )
     if nprobe == 1:
@@ -421,8 +460,6 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, nprobe: int = 1,
             out_id, F.col(f"b.{out_vec}").alias(out_vec),
             F.col("b.cell_id").alias("cell_id"),
         )
-
-    from pyspark.sql.window import Window
 
     w = Window.partitionBy(out_id).orderBy(F.desc("ccos"), F.asc("cell_id"))
     return (
@@ -450,17 +487,15 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     candidates have one cell — so no dedup stage is needed.
     Returns (query_id, vec_id, rank, cos_m).
     """
-    from pyspark.sql.window import Window
-
     cent = centroids if centroids is not None else seed_centroids(
         vectors, n_cells, id_col, vec_col
     )
     c = ivf_assign(vectors, cent, nprobe=1, id_col=id_col, vec_col=vec_col,
                    out_id="vec_id", out_vec="cv").withColumn(
-        "_cn", _norm_col("cv"))
+        "_cn", norm("cv"))
     q = ivf_assign(queries, cent, nprobe=nprobe, id_col=id_col,
                    vec_col=vec_col, out_id="query_id", out_vec="qv"
-                   ).withColumn("_qn", _norm_col("qv"))
+                   ).withColumn("_qn", norm("qv"))
     scored = (
         c.join(F.broadcast(q), ["cell_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -468,16 +503,10 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         # dot/(_qn*_cn) is bit-identical to cosine(qv, cv)
         .withColumn(
             "cos",
-            _dot_cols("qv", "cv") / (F.col("_qn") * F.col("_cn")),
+            dot("qv", "cv") / (F.col("_qn") * F.col("_cn")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank",
-                F.floor(F.col("cos") * scale).cast("long").alias("cos_m"))
-    )
+    return _top_k(scored, k, F.desc("cos"), _cos_m(scale))
 
 
 def embedding_near_dup_pairs(vectors: DataFrame, threshold: float = 0.4,
@@ -492,17 +521,17 @@ def embedding_near_dup_pairs(vectors: DataFrame, threshold: float = 0.4,
     """
     a = vectors.select(
         F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("va")
-    ).withColumn("_na", _norm_col("va"))
+    ).withColumn("_na", norm("va"))
     b = vectors.select(
         F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("vb")
-    ).withColumn("_nb", _norm_col("vb"))
+    ).withColumn("_nb", norm("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         # hoisted norms — one dot per pair; bit-identical to cosine(va, vb)
-        .withColumn("cos", _dot_cols("va", "vb")
+        .withColumn("cos", dot("va", "vb")
                     / (F.col("_na") * F.col("_nb")))
         .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.floor(F.col("cos") * scale).cast("long").alias("cos_m"))
+        .select("id_a", "id_b", _cos_m(scale))
     )
 
 
@@ -536,16 +565,13 @@ def embedding_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.4,
         # hoisted norms: one dot per candidate pair (see _bucket_tagged)
         .withColumn(
             "cos",
-            _dot_cols("va", "vb") / (F.col("va_n") * F.col("vb_n")),
+            dot("va", "vb") / (F.col("va_n") * F.col("vb_n")),
         )
         .filter(F.col("cos") >= threshold)
     )
     if n_tables > 1:
         pairs = pairs.groupBy("id_a", "id_b").agg(F.max("cos").alias("cos"))
-    return pairs.select(
-        "id_a", "id_b",
-        F.floor(F.col("cos") * scale).cast("long").alias("cos_m"),
-    )
+    return pairs.select("id_a", "id_b", _cos_m(scale))
 
 
 def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
@@ -593,7 +619,7 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
     # vector at materialization, never per within-cell pair
     assigned = ivf_assign(
         vectors, cents, nprobe=1, id_col=id_col, vec_col=vec_col
-    ).withColumn("_n", _norm_col("v")).persist(StorageLevel.MEMORY_AND_DISK)
+    ).withColumn("_n", norm("v")).persist(StorageLevel.MEMORY_AND_DISK)
     a = assigned.select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
         F.col("_n").alias("_na"), "cell_id"
@@ -606,7 +632,7 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
         a.join(b, "cell_id")
         .filter(F.col("id_a") < F.col("id_b"))
         # hoisted norms — one dot per pair; bit-identical to cosine(va, vb)
-        .withColumn("cos", _dot_cols("va", "vb")
+        .withColumn("cos", dot("va", "vb")
                     / (F.col("_na") * F.col("_nb")))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b")
@@ -628,17 +654,6 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
     )
 
 
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared Euclidean distance as an ordered left fold — the same
-    summation order as the DuckDB oracle's list_sum(list_transform),
-    so cross-engine argmin comparisons see identical bits."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def seed_pq_codebooks(vectors: DataFrame, m: int = 8, k: int = 16,
                       dim: int = 64, id_col: str = "vec_id",
                       vec_col: str = "embedding") -> DataFrame:
@@ -651,8 +666,6 @@ def seed_pq_codebooks(vectors: DataFrame, m: int = 8, k: int = 16,
     Returns (sub, code_id, centroid) — m·k rows, always broadcastable.
     """
     d0 = dim // m
-    from pyspark.sql.window import Window
-
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     seeds = (
         vectors.select(id_col, as_double(F.col(vec_col)).alias("e"))
@@ -698,7 +711,7 @@ def _pq_best(v: DataFrame, cb: DataFrame, m: int, d0: int) -> DataFrame:
     """
     subs = _subvectors(v, m, d0)
     scored = subs.join(F.broadcast(cb), "sub").withColumn(
-        "d", l2sq(F.col("sv"), F.col("centroid"))
+        "d", l2sq("sv", "centroid")
     )
     return scored.groupBy("vec_id", "sub").agg(
         F.min_by(
@@ -721,16 +734,15 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame | None = None,
     against the broadcast m·k codebook, so the encode is ONE Arrow
     mapInPandas kernel with ZERO exchanges — replacing the subvector
     explode + interpreted L2² folds + min_by combine + vec-keyed
-    assembly aggregate + join. The numpy kernel accumulates in the
-    folds' exact IEEE order (L2² = Σ(x−y)² left fold; reconstruction
-    cosine = dot/(na·nr) with ordered norms), and codebook rows are
-    code_id-ascending so numpy's first-min equals the (d, code_id)
-    min_by tie-break. Distances stay ordered-fold L2² so the argmin is
+    assembly aggregate + join. The numpy kernel accumulates through the
+    shared ordered fold (_np_pq_codes: L2² = Σ(x−y)² left fold, codebook
+    rows code_id-ascending so numpy's first-min equals the (d, code_id)
+    min_by tie-break; reconstruction cosine = dot/(na·nr) with ordered
+    norms). Distances stay ordered-fold L2² so the argmin is
     bit-identical in the DuckDB oracle (sqrt-ing would let two distinct
     sums round to an equal distance and flip a tiebreak).
     Returns (vec_id, codes 'c0,...,cm-1', recon_cos_m).
     """
-    import numpy as np
     import pandas as pd
 
     d0 = dim // m
@@ -739,17 +751,7 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame | None = None,
         if codebooks is not None
         else seed_pq_codebooks(vectors, m, k, dim, id_col, vec_col)
     )
-    spark = vectors.sparkSession
-    cbp = cb.select(
-        F.col("sub").cast("int").alias("sub"),
-        F.col("code_id").cast("int").alias("code_id"),
-        as_double(F.col("centroid")).alias("c"),
-    ).toPandas().sort_values(["sub", "code_id"])
-    CB = [
-        np.array(cbp[cbp["sub"] == j]["c"].tolist(), dtype=np.float64)
-        for j in range(m)
-    ]
-    bc = spark.sparkContext.broadcast(CB)
+    bc = vectors.sparkSession.sparkContext.broadcast(_np_codebooks(cb, m))
     id_t = vectors.schema[id_col].dataType.simpleString()
 
     def _enc(it):
@@ -757,26 +759,13 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame | None = None,
         for pdf in it:
             if not len(pdf):
                 continue
-            A = np.array(pdf["__e"].tolist(), dtype=np.float64)
-            n = A.shape[0]
-            codes = np.empty((n, m), dtype=np.int64)
-            recon = np.empty_like(A)
-            for j in range(m):
-                As = A[:, j * d0 : (j + 1) * d0]
-                Bs = CB[j]
-                D = np.zeros((n, Bs.shape[0]))
-                for d in range(d0):
-                    t = As[:, d : d + 1] - Bs[None, :, d]
-                    D += t * t
-                cj = np.argmin(D, axis=1)  # first min = min code_id
-                codes[:, j] = cj
-                recon[:, j * d0 : (j + 1) * d0] = Bs[cj]
-            dotv = np.zeros(n)
-            for d in range(A.shape[1]):
-                dotv = dotv + A[:, d] * recon[:, d]
-            na = _np_ordered_norms(A)
-            nr = _np_ordered_norms(recon)
-            cosm = np.floor(dotv / (na * nr) * float(scale)).astype(np.int64)
+            A = _np_matrix(pdf["__e"])
+            codes = _np_pq_codes(A, CB, d0)
+            recon = np.hstack([CB[j][codes[:, j]] for j in range(m)])
+            cos = _np_row_dots(A, recon) / (
+                _np_ordered_norms(A) * _np_ordered_norms(recon)
+            )
+            cosm = np.floor(cos * float(scale)).astype(np.int64)
             yield pd.DataFrame({
                 "vec_id": pdf["__id"],
                 "codes": [",".join(map(str, row)) for row in codes],
@@ -840,7 +829,7 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         "query_id",
         "sub",
         "code_id",
-        F.floor(l2sq(F.col("sv"), F.col("centroid")) * scale)
+        F.floor(l2sq("sv", "centroid") * scale)
         .cast("long")
         .alias("part_q"),
     )
@@ -850,16 +839,7 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         .groupBy("query_id", "vec_id")
         .agg(F.sum("part_q").alias("adist_q"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_q").asc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "adist_q")
-    )
+    return _top_k(scored, k, F.asc("adist_q"), "adist_q")
 
 
 def pq_topk_rerank(vectors: DataFrame, queries: DataFrame, k: int = 5,
@@ -882,8 +862,6 @@ def pq_topk_rerank(vectors: DataFrame, queries: DataFrame, k: int = 5,
     :func:`brute_force_topk`'s output shape, so callers can swap the
     exact scan for this at scale without touching consumers.
     """
-    from pyspark.sql.window import Window
-
     short = pq_topk(
         vectors, queries, k=shortlist, m=m, n_codes=n_codes, dim=dim,
         codebooks=codebooks, id_col=id_col, vec_col=vec_col,
@@ -898,62 +876,26 @@ def pq_topk_rerank(vectors: DataFrame, queries: DataFrame, k: int = 5,
     scored = (
         short.join(v, "vec_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("cos", cosine(F.col("qe"), F.col("e")))
+        .withColumn("cos", cosine("qe", "e"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "rank",
-            F.floor(F.col("cos") * scale).cast("long").alias("cos_m"),
-        )
-    )
+    return _top_k(scored, k, F.desc("cos"), _cos_m(scale))
 
 
 # ---- bitext mining (margin-based parallel-text pairs) ----------------------
 
-def _np_ordered_norms(M):
-    """Row norms with the fold's left-to-right summation order, so the
-    doubles are bit-identical to ``norm()`` (sqrt of the sequential dot)."""
-    import numpy as np
-
-    acc = np.zeros(M.shape[0])
-    for d in range(M.shape[1]):
-        c = M[:, d]
-        acc = acc + c * c
-    return np.sqrt(acc)
-
-
-def _np_cs_matrix(A, A_norms, B, B_norms, k_unused=None):
+def _np_cs_matrix(A, A_norms, B, B_norms):
     """Quantized shifted milli-cosine matrix between row blocks A and B,
     IEEE-op-for-op identical to the Catalyst expression
-    ``floor(dot(a,b) / (na * nb) * 1000) + 1000``:
-
-    - the dot is accumulated dimension-by-dimension (one multiply + one
-      add per term, left to right) — the exact order of the zip_with +
-      aggregate fold, NOT numpy's pairwise/BLAS summation, so every
-      partial sum rounds identically;
-    - the quantization applies the same op sequence (divide by the norm
-      product, scale, floor, shift).
-    """
-    import numpy as np
-
-    P = np.zeros((A.shape[0], B.shape[0]))
-    for d in range(A.shape[1]):
-        # a[i,d]*b[j,d] is one IEEE multiply; += one IEEE add — matching
-        # the fold's (acc, x) -> acc + x over zip_with products
-        P += A[:, d : d + 1] * B[None, :, d]
+    ``floor(dot(a,b) / (na * nb) * 1000) + 1000``: the ordered-fold dot
+    (_np_dots), then the same op sequence (divide by the norm product,
+    scale, floor, shift)."""
+    P = _np_dots(A, B)
     cs = np.floor(P / (A_norms[:, None] * B_norms[None, :]) * 1000.0) + 1000.0
     return cs.astype(np.int64)
 
 
 def _np_sumk(cs, k: int):
     """Sum of each row's top-k quantized cosines (long, order-free)."""
-    import numpy as np
-
     if cs.shape[1] <= k:
         return cs.sum(axis=1)
     return np.partition(cs, cs.shape[1] - k, axis=1)[:, -k:].sum(axis=1)
@@ -965,8 +907,6 @@ def _np_best(cs, my_sumk, other_sumk, other_ids, k: int):
     max of the Catalyst plan, in exact int64 arithmetic (the double
     quotient's floor equals integer floor division at these operand
     bounds, see bitext_mine's docstring)."""
-    import numpy as np
-
     margin = (cs * np.int64(2 * k * 10000)) // (
         my_sumk[:, None] + other_sumk[None, :]
     )
@@ -1017,7 +957,6 @@ def bitext_mine(src_vecs: DataFrame, tgt_vecs: DataFrame, k: int = 4,
     mutual, mined) — its best target, the raw milli-cosine, the margin,
     whether the pair is mutual-best, and mutual AND margin >= threshold.
     """
-    import numpy as np
     import pandas as pd
 
     spark = src_vecs.sparkSession
@@ -1028,9 +967,7 @@ def bitext_mine(src_vecs: DataFrame, tgt_vecs: DataFrame, k: int = 4,
             F.col(id_col).cast("long").alias("id"),
             as_double(F.col(vec_col)).alias("v"),
         ).toPandas()
-        ids = pdf["id"].to_numpy(np.int64)
-        M = np.array(pdf["v"].tolist(), dtype=np.float64)
-        return ids, M
+        return pdf["id"].to_numpy(np.int64), _np_matrix(pdf["v"])
 
     s_ids, S = _mat(src_vecs)
     t_ids, T = _mat(tgt_vecs)
@@ -1052,17 +989,17 @@ def bitext_mine(src_vecs: DataFrame, tgt_vecs: DataFrame, k: int = 4,
     )
 
     def _batches(it):
+        """(side, rows, their matrix, its ordered norms) per side."""
         for pdf in it:
             for side in (0, 1):
                 part = pdf[pdf["side"] == side]
                 if len(part):
-                    yield side, part
+                    A = _np_matrix(part["v"])
+                    yield side, part, A, _np_ordered_norms(A)
 
     def sumk_fn(it):
         b = bc.value
-        for side, part in _batches(it):
-            A = np.array(part["v"].tolist(), dtype=np.float64)
-            An = _np_ordered_norms(A)
+        for side, part, A, An in _batches(it):
             o = ("T", "t_n") if side == 0 else ("S", "s_n")
             cs = _np_cs_matrix(A, An, b[o[0]], b[o[1]])
             yield pd.DataFrame({
@@ -1087,9 +1024,7 @@ def bitext_mine(src_vecs: DataFrame, tgt_vecs: DataFrame, k: int = 4,
 
     def best_fn(it):
         b, b2 = bc.value, bc2.value
-        for side, part in _batches(it):
-            A = np.array(part["v"].tolist(), dtype=np.float64)
-            An = _np_ordered_norms(A)
+        for side, part, A, An in _batches(it):
             ids = part["id"].to_numpy(np.int64)
             if side == 0:
                 cs = _np_cs_matrix(A, An, b["T"], b["t_n"])

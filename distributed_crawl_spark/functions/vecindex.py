@@ -32,15 +32,20 @@ tools/vecindex_scaling.py at commit 636ac4a, BENCH.md round 5).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import (
-    _pq_best,
+    _cos_m,
+    _np_codebooks,
+    _np_dots,
+    _np_matrix,
+    _np_ordered_norms,
+    _np_pq_codes,
     _subvectors,
+    _top_k,
     as_double,
     cosine,
     ivf_assign,
@@ -75,15 +80,13 @@ def encode_codes(vectors: DataFrame, centroids: DataFrame,
     mapInPandas kernel with ZERO exchanges — the previous form paid the
     interpreted per-pair cosine/L2² higher-order folds plus an N-row
     min_by combine and a vec_id join. The numpy kernel accumulates
-    dimension-by-dimension in the folds' exact IEEE order (cosine =
-    dot/(vn·cn) with hoisted ordered norms; L2² = Σ(x−y)² left fold),
-    centroid rows are laid out cell_id-ascending and codebook rows
-    code_id-ascending so numpy's first-max/first-min tie-break equals
-    the (ccos, −cell_id) max_by / (d, code_id) min_by exactly."""
+    through the similarity module's ordered fold (cosine = _np_dots /
+    (vn·cn) with ordered norms; codes = _np_pq_codes), centroid rows
+    are laid out cell_id-ascending and codebook rows code_id-ascending
+    so numpy's first-max/first-min tie-break equals the (ccos, −cell_id)
+    max_by / (d, code_id) min_by exactly."""
     import numpy as np
     import pandas as pd
-
-    from .similarity import _np_ordered_norms
 
     d0 = dim // m
     spark = vectors.sparkSession
@@ -93,20 +96,9 @@ def encode_codes(vectors: DataFrame, centroids: DataFrame,
         as_double(F.col("centroid")).alias("c"),
     ).toPandas().sort_values("cid")
     cent_ids = cp["cid"].to_numpy(np.int64)
-    C = np.array(cp["c"].tolist(), dtype=np.float64)
+    C = _np_matrix(cp["c"])
     cn = _np_ordered_norms(C)
-
-    cbp = codebooks.select(
-        F.col("sub").cast("int").alias("sub"),
-        F.col("code_id").cast("int").alias("code_id"),
-        as_double(F.col("centroid")).alias("c"),
-    ).toPandas().sort_values(["sub", "code_id"])
-    CB = [
-        np.array(
-            cbp[cbp["sub"] == j]["c"].tolist(), dtype=np.float64
-        )
-        for j in range(m)
-    ]
+    CB = _np_codebooks(codebooks, m)
     bc = spark.sparkContext.broadcast((cent_ids, C, cn, CB))
 
     id_t = vectors.schema[id_col].dataType.simpleString()
@@ -117,25 +109,13 @@ def encode_codes(vectors: DataFrame, centroids: DataFrame,
         for pdf in it:
             if not len(pdf):
                 continue
-            A = np.array(pdf["__e"].tolist(), dtype=np.float64)
+            A = _np_matrix(pdf["__e"])
             n = A.shape[0]
-            an = _np_ordered_norms(A)
-            # cell argmax: ordered-accumulation dot, cosine op order
-            P = np.zeros((n, C.shape[0]))
-            for d in range(A.shape[1]):
-                P += A[:, d : d + 1] * C[None, :, d]
-            ccos = P / (an[:, None] * cn[None, :])
+            # cell argmax: ordered-fold dot, cosine op order
+            ccos = _np_dots(A, C) / (_np_ordered_norms(A)[:, None]
+                                     * cn[None, :])
             cell = cent_ids[np.argmax(ccos, axis=1)]  # first max = min cid
-            # PQ codes per subspace: ordered-fold L2² argmin
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                As = A[:, j * d0 : (j + 1) * d0]
-                Bs = CB[j]
-                D = np.zeros((n, Bs.shape[0]))
-                for d in range(d0):
-                    t = As[:, d : d + 1] - Bs[None, :, d]
-                    D += t * t
-                codes[:, j] = np.argmin(D, axis=1)  # first min = min code
+            codes = _np_pq_codes(A, CB, d0).astype(np.int32)
             ids = pdf["__id"].to_numpy()
             yield pd.DataFrame({
                 "vec_id": np.repeat(ids, m),
@@ -262,7 +242,7 @@ def vector_index_topk(index: VectorIndex, queries: DataFrame, k: int = 5,
     qsubs = _subvectors(q, m, d0, id_out="query_id")
     lut = qsubs.join(F.broadcast(index.codebooks), "sub").select(
         "query_id", "sub", "code_id",
-        F.floor(l2sq(F.col("sv"), F.col("centroid")) * scale)
+        F.floor(l2sq("sv", "centroid") * scale)
         .cast("long").alias("part_q"),
     )
     cand = index.codes.join(F.broadcast(qcells), "cell_id")
@@ -272,16 +252,7 @@ def vector_index_topk(index: VectorIndex, queries: DataFrame, k: int = 5,
         .groupBy("query_id", "vec_id")
         .agg(F.sum("part_q").alias("adist_q"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_q").asc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "adist_q")
-    )
+    return _top_k(scored, k, F.asc("adist_q"), "adist_q")
 
 
 def vector_index_topk_rerank(index: VectorIndex, queries: DataFrame,
@@ -310,19 +281,9 @@ def vector_index_topk_rerank(index: VectorIndex, queries: DataFrame,
     scored = (
         short.join(v, "vec_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("cos", cosine(F.col("qe"), F.col("e")))
+        .withColumn("cos", cosine("qe", "e"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "rank",
-            F.floor(F.col("cos") * scale).cast("long").alias("cos_m"),
-        )
-    )
+    return _top_k(scored, k, F.desc("cos"), _cos_m(scale))
 
 
 def index_neardup(index: VectorIndex, increment: DataFrame,
@@ -363,7 +324,7 @@ def index_neardup(index: VectorIndex, increment: DataFrame,
         .join(F.broadcast(q), "query_id")
         .withColumn(
             "cos_m",
-            F.floor(cosine(F.col("qe"), F.col("ce")) * 1000).cast("long"),
+            F.floor(cosine("qe", "ce") * 1000).cast("long"),
         )
         .groupBy("query_id")
         .agg(

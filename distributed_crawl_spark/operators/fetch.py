@@ -134,12 +134,7 @@ def fetch_hits(
     against the materialized result (the driver writes hits first, making
     the miss anti-join a cheap parquet-vs-parquet join).
     """
-    page_side = pages.select(
-        "url",
-        F.col("warc_ts").alias("last_modified"),
-        "html",
-        F.lit(True).alias("page_hit"),
-    )
+    page_side = _page_side(pages)
     if strategy == "broadcast":
         joined = page_side.join(F.broadcast(selected), "url", "inner")
     else:
@@ -148,8 +143,7 @@ def fetch_hits(
                                  with_anchors, honor_nofollow, with_meta)
 
 
-def fetch_misses(selected: DataFrame, hit_urls: DataFrame,
-                 with_anchors: bool = False) -> DataFrame:
+def fetch_misses(selected: DataFrame, hit_urls: DataFrame) -> DataFrame:
     """Selected rows whose url has no page: status 404, no content.
     Column set matches :func:`fetch_hits` so the two union cleanly."""
     missed = selected.join(hit_urls.select("url"), "url", "left_anti")
@@ -166,43 +160,22 @@ def fetch_misses(selected: DataFrame, hit_urls: DataFrame,
         .withColumn("extracted_links", F.array().cast("array<string>"))
         .withColumn("geo_blocked", F.lit(None).cast("boolean"))
         .withColumn("method", F.lit("pages_table_join"))
-        .withColumns(
-            {"anchors": F.array().cast(_ANCHORS_SQL)} if with_anchors else {}
-        )
     )
 
 
-def fetch_and_extract(
-    selected: DataFrame,
-    pages: DataFrame,
-    max_links: int | None = 10,
-    extract_links: bool = True,
-    strategy: str = "shuffle",
-    extract_mode: str = "basic",
-    with_anchors: bool = False,
-    honor_nofollow: bool = False,
-) -> DataFrame:
-    """One-shot hits+misses (left-join semantics). Convenient for tests and
-    single-pass queries; the round driver uses fetch_hits/fetch_misses with
-    a materialization in between instead."""
-    if strategy == "broadcast":
-        hits = fetch_hits(selected, pages, max_links, extract_links, strategy,
-                          extract_mode, with_anchors, honor_nofollow)
-        return hits.select(*_ordered_cols(hits)).unionByName(
-            fetch_misses(selected, hits, with_anchors).select(
-                *_ordered_cols(hits)
-            )
-        )
-    page_side = pages.select(
+def fetch_and_extract(selected: DataFrame, pages: DataFrame,
+                      max_links: int | None = 10) -> DataFrame:
+    """One-shot hits+misses as one ``selected LEFT JOIN pages``, for
+    single-pass queries; the round driver uses fetch_hits/fetch_misses
+    with a materialization in between instead."""
+    joined = selected.join(_page_side(pages), "url", "left")
+    return _with_extract_columns(joined, max_links, True)
+
+
+def _page_side(pages: DataFrame) -> DataFrame:
+    return pages.select(
         "url",
         F.col("warc_ts").alias("last_modified"),
         "html",
         F.lit(True).alias("page_hit"),
     )
-    joined = selected.join(page_side, "url", "left")
-    return _with_extract_columns(joined, max_links, extract_links, extract_mode,
-                                 with_anchors, honor_nofollow)
-
-
-def _ordered_cols(df: DataFrame) -> list[str]:
-    return df.columns

@@ -64,16 +64,86 @@ def test_plane_matrix_deterministic():
 
 
 def test_lsh_bucket_is_stable_and_groups_near_dups(vec_df, spark):
-    b = vec_df.select(
-        "vec_id",
-        SIM.lsh_bucket(SIM.as_double(F.col("embedding")), DIM, n_planes=4).alias("bucket"),
-    )
+    b = SIM._bucket_tagged(vec_df, "vec_id", "v", "vec_id", "embedding",
+                           DIM, n_planes=4, n_tables=1)
     got = {r.vec_id: r.bucket for r in b.collect()}
     assert got == {r.vec_id: r.bucket for r in b.collect()}  # deterministic
     assert 0 <= min(got.values()) and max(got.values()) < 16
     # planted near-dup lands in the same bucket (sign pattern is robust to
     # a 1% perturbation with overwhelming probability at this seed)
     assert got[0] == got[1]
+
+
+def _bits(x) -> np.ndarray:
+    return np.asarray(x, dtype=np.float64).view(np.int64)
+
+
+def test_sql_folds_bit_equal_numpy_fold(spark):
+    """The one summation order, checked across its two forms: the
+    SQL-text folds (dot, norm, cosine, l2sq) and the numpy primitives
+    every Arrow kernel accumulates through agree bit for bit, and the
+    numpy PQ argmin picks _pq_best's code_id, exact ties included."""
+    rng = np.random.RandomState(12)
+    m, d0, k = 4, 4, 8
+    CB = rng.randint(-3, 4, size=(m, k, d0)).astype(np.float64)
+    CB[:, 1] = CB[:, 0]
+    CB[:, 1, 0] += 2.0   # codes 0 and 1 are 2 apart along one axis
+    CB[:, 6] = CB[:, 2]  # code 6 duplicates code 2
+
+    def mags(d):  # ±10^U(-8,8): summation order changes the bits
+        return rng.choice([-1.0, 1.0], d) * 10.0 ** rng.uniform(-8, 8, d)
+
+    rows = []
+    for i in range(240):
+        d = 1 + i % 64
+        if i % 3:
+            e = mags(m * d0)
+        else:  # every slice on an exact tie: 0/1 midpoint, or code 2 = 6
+            e = np.concatenate([
+                CB[j, 0] + np.eye(d0)[0] if (i + j) % 2 else CB[j, 2]
+                for j in range(m)
+            ])
+        rows.append((i, mags(d).tolist(), mags(d).tolist(), e.tolist()))
+    df = spark.createDataFrame(
+        rows, "vec_id long, a array<double>, b array<double>, e array<double>")
+    cb = spark.createDataFrame(
+        [(j, c, CB[j, c].tolist()) for j in range(m) for c in range(k)],
+        "sub int, code_id int, centroid array<double>")
+    codes = SIM._pq_best(df.select("vec_id", "e"), cb, m, d0).groupBy(
+        "vec_id").agg(F.sort_array(F.collect_list(F.struct(
+            "sub", F.col("b.code_id").alias("code_id")))).alias("codes"))
+    got = df.join(codes, "vec_id").select(
+        "vec_id", "a", "b", "e", "codes",
+        SIM.dot("a", "b").alias("dot"), SIM.norm("a").alias("norm"),
+        SIM.cosine("a", "b").alias("cos"), SIM.l2sq("a", "b").alias("l2sq"),
+    ).orderBy("vec_id").collect()
+    assert len(got) == len(rows)
+
+    row = [(np.array([r.a]), np.array([r.b])) for r in got]
+    dots = [SIM._np_row_dots(a, b)[0] for a, b in row]
+    norms = [SIM._np_ordered_norms(a)[0] for a, _ in row]
+    assert (_bits([r.dot for r in got]) == _bits(dots)).all()
+    assert (_bits([r.dot for r in got])
+            == _bits([SIM._np_dots(a, b)[0, 0] for a, b in row])).all()
+    assert (_bits([r.norm for r in got]) == _bits(norms)).all()
+    assert (_bits([r.l2sq for r in got])
+            == _bits([SIM._np_dots(a, b, l2=True)[0, 0] for a, b in row])).all()
+    cos = [dt / (na * SIM._np_ordered_norms(b)[0])
+           for dt, na, (_, b) in zip(dots, norms, row)]
+    assert (_bits([r.cos for r in got]) == _bits(cos)).all()
+    # the data is order-sensitive: a right-to-left sum differs somewhere
+    rev = [sum(x * y for x, y in zip(r.a[::-1], r.b[::-1])) for r in got]
+    assert (_bits(rev) != _bits(dots)).any()
+
+    E = np.array([r.e for r in got])
+    np_codes = SIM._np_pq_codes(E, list(CB), d0)
+    assert np_codes.tolist() == [[c.code_id for c in r.codes] for r in got]
+    ties = sum(
+        int(((D == D.min(axis=1, keepdims=True)).sum(axis=1) > 1).sum())
+        for D in (SIM._np_dots(E[:, j * d0:(j + 1) * d0], CB[j], l2=True)
+                  for j in range(m))
+    )
+    assert ties >= 80 * m  # every planted slice sits on an exact tie
 
 
 def test_lsh_topk_recalls_near_dup(vec_df):
@@ -203,7 +273,7 @@ def test_kmeans_codebook_recovers_planted_clusters(spark):
     def mean_best_cos(cb):
         a = SIM.ivf_assign(vecs, cb, nprobe=1)
         joined = a.join(cb, "cell_id").select(
-            SIM.cosine(F.col("v"), F.col("centroid")).alias("c"))
+            SIM.cosine("v", "centroid").alias("c"))
         return joined.agg(F.avg("c")).first()[0]
 
     assert trained.count() == 3

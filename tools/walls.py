@@ -2,46 +2,60 @@
 per-operator wall protocol of BENCH.md's session tables (one JVM, one
 untimed warmup pass per query, then three timed noop writes, median).
 
-Usage: python tools/walls.py SF_DIR CORES Q1 [Q2 ...]
+``--checkout DIR`` times the queries of another checkout (its package
+and ``__spark_entry__.py``) instead of this one's. A commit-vs-commit
+A/B runs one leg per checkout and interleaves them (A, B, A, B, ...)
+within one session, so both sides sample the same VM phase.
+
+Usage: python tools/walls.py [--checkout DIR] SF_DIR CORES Q1 [Q2 ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import statistics
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
 
 def main() -> None:
-    sf_dir, cores, *names = sys.argv[1:]
+    ap = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--checkout",
+                    default=str(Path(__file__).resolve().parent.parent),
+                    help="checkout whose queries run (default: this one)")
+    ap.add_argument("sf_dir")
+    ap.add_argument("cores", type=int)
+    ap.add_argument("queries", nargs="+")
+    args = ap.parse_args()
+    sys.path.insert(0, args.checkout)
 
     from distributed_crawl_spark.session import build_session
 
     import __spark_entry__ as entry
 
-    spark = build_session(app_name="walls", cores=int(cores),
-                          shuffle_partitions=int(cores))
+    spark = build_session(app_name="walls", cores=args.cores,
+                          shuffle_partitions=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     out = {}
-    for q in names:
-        qs[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    for q in args.queries:
+        qs[q](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         walls = []
         for _ in range(3):
             t0 = time.monotonic()
-            qs[q](spark, sf_dir).write.format("noop") \
+            qs[q](spark, args.sf_dir).write.format("noop") \
                 .mode("overwrite").save()
             walls.append(time.monotonic() - t0)
-        rows = qs[q](spark, sf_dir).count()
+        rows = qs[q](spark, args.sf_dir).count()
         out[q] = {"wall_s": round(statistics.median(walls), 3),
                   "rows": rows,
                   "all": [round(w, 3) for w in walls]}
-    print(json.dumps({"sf_dir": sf_dir, "cores": int(cores),
-                      "walls": out}))
+    print(json.dumps({"checkout": args.checkout, "sf_dir": args.sf_dir,
+                      "cores": args.cores, "walls": out}))
     spark.stop()
 
 
