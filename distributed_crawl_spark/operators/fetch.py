@@ -87,7 +87,7 @@ def _with_extract_columns(
         # path is unavailable)
         .withColumn(
             "method",
-            F.when(F.coalesce(U.is_geo_blocked(text), F.lit(False)),
+            F.when(F.coalesce(F.col("geo_blocked"), F.lit(False)),
                    F.lit("local_geo_blocked")).otherwise(F.lit("pages_table_join")),
         )
         .withColumns(
