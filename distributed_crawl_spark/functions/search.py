@@ -32,19 +32,25 @@ anyway — capping at 1000 changes scores by < 0.2%), so the product is
 ``<= 2.4e7 * 22 * 1e3 * A``; with avgdl up to ~40k milli-tokens that is
 ~2e16, comfortably inside signed-64.
 
-Scale story: the index build is ONE explode + groupBy((term, doc))
-token shuffle (map-combinable) plus a term-level census for df — the
-same two-exchange shape as ``unigram_logprob``. Scoring a query
-broadcast-joins the (tiny) query-term IDF table against the postings
-of just those terms (LEFT SEMI shape — postings of non-query terms are
-never shuffled), aggregates per doc, and takes the global top-k with
-``orderBy().limit(k)`` — Spark's TakeOrdered, a map-side partial top-k
-with no full sort. At 10^10 documents the only unbounded exchanges are
-the two census shuffles, both uniform in (term, doc).
+Scale story: every posting fact — tf, positions, dl — is local to its
+document, so :func:`build_postings` is one per-row Arrow kernel with
+no exchange; the corpus-wide reductions are the df census behind
+:func:`term_idf` (``groupBy(term)``, vocabulary-sized) and the per-doc
+length fold behind :func:`corpus_stats`, both map-side combinable. The
+ad-hoc searches (:func:`bm25_topk`,
+:func:`phrase_topk`) build no postings and read no index: one per-doc
+kernel emits (doc_id, dl, tf per query term), corpus stats and dfs fold
+to one 1-row aggregate, and the score is a per-row integer expression
+against that broadcast row. The persisted index pays one term-bucket
+repartition at build time; its queries scan only the query terms'
+bucket directories. Every search ends in ``orderBy().limit(k)`` —
+Spark's TakeOrdered, a map-side partial top-k with no full sort.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -118,19 +124,96 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
     ).mapInPandas(_post, schema)
 
 
-def corpus_stats(postings: DataFrame) -> DataFrame:
-    """One-row (n_docs, avgdl_x1000) over the postings table.
+def _idf_q(n_docs, df):
+    """BM25+ idf ``ln((N - df + .5)/(df + .5) + 1)`` floor-quantized to
+    micro-units — the one idf expression; every score reads it."""
+    return F.floor(
+        F.log((n_docs - df + F.lit(0.5)) / (df + F.lit(0.5)) + F.lit(1.0))
+        * IDF_SCALE
+    ).cast("long")
 
-    ``avgdl_x1000 = floor(1000 * sum(dl) / n_docs)`` — dl is summed once
-    per document (postings repeat it per term, so aggregate the distinct
-    per-doc lengths)."""
-    per_doc = postings.select("doc_id", "dl").groupBy("doc_id").agg(
+
+def _term_score(idf: str, tf: str):
+    """One (term, doc) contribution in integer arithmetic (module
+    docstring): ``idf`` and ``tf`` name columns; ``dl`` and
+    ``avgdl_x1000`` are read by name."""
+    return F.expr(
+        f"({idf} * 22 * {tf} * avgdl_x1000) div "
+        f"(10 * avgdl_x1000 * {tf} + 3 * avgdl_x1000 + 9000 * dl)"
+    ).cast("long")
+
+
+def _doc_lengths(postings: DataFrame) -> DataFrame:
+    """(doc_id, dl) once per document — postings repeat dl per term."""
+    return postings.select("doc_id", "dl").groupBy("doc_id").agg(
         F.first("dl").alias("dl")
     )
-    return per_doc.agg(
+
+
+def _length_stats(per_doc: DataFrame, *extra) -> DataFrame:
+    """The one corpus-stats fold: a 1-row ``(n_docs, sum_dl, *extra,
+    avgdl_x1000)`` over per-doc rows carrying ``dl``."""
+    return _with_avgdl(per_doc.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.expr("(sum(dl) * 1000) div count(1)")
-        .cast("long").alias("avgdl_x1000"),
+        F.sum("dl").cast("long").alias("sum_dl"),
+        *extra,
+    ))
+
+
+def _with_avgdl(stats: DataFrame) -> DataFrame:
+    """Append ``avgdl_x1000 = floor(1000 * sum_dl / n_docs)``, the
+    average document length in milli-tokens."""
+    return stats.withColumn(
+        "avgdl_x1000", F.expr("(sum_dl * 1000) div n_docs").cast("long")
+    )
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-``k`` by (score_q DESC, doc_id ASC) plus ``rank``.
+    The limit is TakeOrdered; the rank window sees only the k survivors,
+    not a global sort."""
+    order = (F.col("score_q").desc(), F.col("doc_id"))
+    return scored.orderBy(*order).limit(k).select(
+        *scored.columns,
+        F.row_number().over(Window.orderBy(*order)).cast("long")
+        .alias("rank"),
+    )
+
+
+def _rank_docs(per_doc: DataFrame, tfs: Sequence[str], k: int,
+               keep: Sequence[str] = (),
+               stats: DataFrame | None = None) -> DataFrame:
+    """Score per-doc rows ``(doc_id, dl, *tfs)`` — one tf column per
+    query term — and rank them: docs with no term are dropped, and the
+    score is the sum of the terms' contributions (a tf = 0 term adds
+    exactly 0). ``stats`` is the 1-row ``(n_docs, avgdl_x1000, df_<tf>
+    …)``; by default it is folded from ``per_doc`` itself. Each term's
+    idf is computed once, on that row. Returns (doc_id, *keep,
+    score_q, rank)."""
+    if stats is None:
+        stats = _length_stats(per_doc, *[
+            F.sum((F.col(t) > 0).cast("long")).cast("long").alias(f"df_{t}")
+            for t in tfs
+        ])
+    idf = stats.select("avgdl_x1000", *[
+        _idf_q(F.col("n_docs"), F.col(f"df_{t}")).alias(f"idf_{t}")
+        for t in tfs
+    ])
+    hit = (F.greatest(*map(F.col, tfs)) if len(tfs) > 1
+           else F.col(tfs[0])) > 0
+    score = reduce(add, [_term_score(f"idf_{t}", t) for t in tfs])
+    return _ranked(
+        per_doc.filter(hit).crossJoin(F.broadcast(idf)).select(
+            "doc_id", *keep, score.alias("score_q")
+        ),
+        k,
+    )
+
+
+def corpus_stats(postings: DataFrame) -> DataFrame:
+    """One-row (n_docs, avgdl_x1000) over the postings table."""
+    return _length_stats(_doc_lengths(postings)).select(
+        "n_docs", "avgdl_x1000"
     )
 
 
@@ -142,16 +225,7 @@ def term_idf(postings: DataFrame, stats: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("df")
     )
     return df_tbl.crossJoin(F.broadcast(stats)).select(
-        "term",
-        "df",
-        F.floor(
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            )
-            * IDF_SCALE
-        ).cast("long").alias("idf_q"),
+        "term", "df", _idf_q(F.col("n_docs"), F.col("df")).alias("idf_q")
     )
 
 
@@ -165,13 +239,9 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
     ad-hoc search never builds corpus-wide postings — ONE per-doc Arrow
     kernel emits (doc_id, dl, tf per query term), from which corpus
     stats AND per-term dfs reduce to a single 1-row aggregate, and the
-    score is a per-row integer expression (a tf=0 term contributes
-    exactly 0, so summing columns equals summing the surviving postings
-    rows). Docs with no query term are dropped before ranking, as the
-    postings join did. Three corpus tokenize passes (stats / idf /
-    scoring subtrees) become two slim kernel passes; zero corpus-wide
-    shuffles remain. The persisted-index path (write_text_index /
-    text_index_topk) is unchanged — this is the index-free form."""
+    score is a per-row integer expression (:func:`_rank_docs`). Zero
+    corpus-wide shuffles; the persisted-index path (write_text_index /
+    text_index_topk) is the index-backed form."""
     import pandas as pd
 
     from .dedup import java_ws_tokens
@@ -200,54 +270,15 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
                 out[f"tf{qi}"] = np.array(tfs[qi], dtype=np.int64)
             yield pd.DataFrame(out)
 
+    tf_cols = [f"tf{i}" for i in range(nq)]
     per_doc = docs.select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")
     ).mapInPandas(
         _tfs,
-        ", ".join(
-            [f"doc_id {id_t}", "dl long"]
-            + [f"tf{i} long" for i in range(nq)]
-        ),
+        ", ".join([f"doc_id {id_t}", "dl long"]
+                  + [f"{t} long" for t in tf_cols]),
     )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.expr("(sum(dl) * 1000) div count(1)").cast("long")
-        .alias("avgdl_x1000"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("long")).cast("long")
-            .alias(f"df{i}")
-            for i in range(nq)
-        ],
-    )
-    # idf_q per term from the 1-row stats — the exact term_idf expression
-    idf_sql = (
-        "CAST(floor(ln((n_docs - df{i} + 0.5) / (df{i} + 0.5) + 1.0)"
-        f" * {IDF_SCALE}) AS BIGINT)"
-    )
-    contrib = (
-        "((" + idf_sql + ") * 22 * tf{i} * avgdl_x1000) div "
-        "(10 * avgdl_x1000 * tf{i} + 3 * avgdl_x1000 + 9000 * dl)"
-    )
-    score = " + ".join("(" + contrib.format(i=i) + ")" for i in range(nq))
-    hit = F.greatest(*[F.col(f"tf{i}") for i in range(nq)]) > 0 \
-        if nq > 1 else F.col("tf0") > 0
-    scored = (
-        per_doc.filter(hit)
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.expr(score).cast("long").alias("score_q"))
-        .orderBy(F.col("score_q").desc(), F.col("doc_id"))
-        .limit(k)
-    )
-    # rank is a window over the k surviving rows only — bounded input,
-    # not a global sort.
-    return scored.select(
-        "doc_id",
-        "score_q",
-        F.row_number()
-        .over(Window.orderBy(F.col("score_q").desc(), F.col("doc_id")))
-        .cast("long")
-        .alias("rank"),
-    )
+    return _rank_docs(per_doc, tf_cols, k)
 
 
 def topk_terms(docs: DataFrame, k: int = 5, id_col: str = "doc_id",
@@ -290,12 +321,6 @@ def _phrase_terms(phrase) -> list[str]:
     return terms
 
 
-_PHRASE_SCORE = (
-    "(idf_q * 22 * ptf * avgdl_x1000) div "
-    "(10 * avgdl_x1000 * ptf + 3 * avgdl_x1000 + 9000 * dl)"
-)
-
-
 def phrase_topk(docs: DataFrame, phrase, k: int = 20,
                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Top-``k`` documents containing an exact token PHRASE, BM25-scored
@@ -312,10 +337,9 @@ def phrase_topk(docs: DataFrame, phrase, k: int = 20,
     start position counts iff every offset matches; overlaps counted,
     capped at TF_CAP) without the posexplode, the offset join, or the
     two census exchanges. n_docs / avgdl / df reduce to ONE 1-row
-    aggregate over the kernel rows; scoring is the same integer
-    expression; TakeOrdered finishes. The persisted positional index
-    (text_index_phrase) is unchanged. Returns (doc_id, ptf, score_q,
-    rank)."""
+    aggregate over the kernel rows and scoring is :func:`bm25_topk`'s
+    (:func:`_rank_docs`); :func:`text_index_phrase` is the index-backed
+    form. Returns (doc_id, ptf, score_q, rank)."""
     import pandas as pd
 
     from .dedup import java_ws_tokens
@@ -351,40 +375,7 @@ def phrase_topk(docs: DataFrame, phrase, k: int = 20,
     per_doc = docs.select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")
     ).mapInPandas(_ptf, f"doc_id {id_t}, dl long, ptf long")
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.expr("(sum(dl) * 1000) div count(1)").cast("long")
-        .alias("avgdl_x1000"),
-        F.sum((F.col("ptf") > 0).cast("long")).cast("long").alias("df"),
-    )
-    idf = stats.select(
-        F.floor(
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            )
-            * IDF_SCALE
-        ).cast("long").alias("idf_q"),
-        "avgdl_x1000",
-    )
-    scored = (
-        per_doc.filter(F.col("ptf") > 0)
-        .crossJoin(F.broadcast(idf))
-        .select(
-            "doc_id", "ptf",
-            F.expr(_PHRASE_SCORE).cast("long").alias("score_q"),
-        )
-        .orderBy(F.col("score_q").desc(), F.col("doc_id"))
-        .limit(k)
-    )
-    return scored.select(
-        "doc_id", "ptf", "score_q",
-        F.row_number()
-        .over(Window.orderBy(F.col("score_q").desc(), F.col("doc_id")))
-        .cast("long")
-        .alias("rank"),
-    )
+    return _rank_docs(per_doc, ["ptf"], k, keep=["ptf"])
 
 
 # ---------------------------------------------------------------------------
@@ -479,18 +470,8 @@ def write_text_index(docs: DataFrame, path: str, id_col: str = "doc_id",
         .partitionBy("term_bucket").parquet(f"{path}/postings")
     )
     written = spark.read.parquet(f"{path}/postings")
-    per_doc = written.select("doc_id", "dl").groupBy("doc_id").agg(
-        F.first("dl").alias("dl")
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    ).select(
-        "n_docs", "sum_dl",
-        F.expr("(sum_dl * 1000) div n_docs").cast("long")
-        .alias("avgdl_x1000"),
-    )
-    idf = term_idf(written, stats.select("n_docs", "avgdl_x1000"))
+    stats = _length_stats(_doc_lengths(written))
+    idf = term_idf(written, stats)
     # idf and stats are independent scans of the written postings —
     # overlap them so the second job back-fills the first one's tail
     from concurrent.futures import ThreadPoolExecutor
@@ -551,45 +532,25 @@ def add_to_text_index(spark: SparkSession, path: str, docs: DataFrame,
     idx = read_text_index(spark, path)
     inc = build_postings(docs, id_col=id_col, text_col=text_col,
                          positions=bool(idx.params.get("positional")))
-    inc_per_doc = inc.select("doc_id", "dl").groupBy("doc_id").agg(
-        F.first("dl").alias("dl")
-    )
-    inc_stats = inc_per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    new_stats = (
+    # stats and dfs are stored raw, so merging is summing
+    new_stats = _with_avgdl(
         idx.stats.select("n_docs", "sum_dl")
-        .unionByName(inc_stats)
+        .unionByName(_length_stats(_doc_lengths(inc))
+                     .select("n_docs", "sum_dl"))
         .agg(F.sum("n_docs").cast("long").alias("n_docs"),
              F.sum("sum_dl").cast("long").alias("sum_dl"))
-        .select(
-            "n_docs", "sum_dl",
-            F.expr("(sum_dl * 1000) div n_docs").cast("long")
-            .alias("avgdl_x1000"),
-        )
-    )
-    inc_df = inc.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
     )
     merged_df = (
         idx.idf.select("term", "df")
-        .unionByName(inc_df)
+        .unionByName(inc.groupBy("term").agg(
+            F.count(F.lit(1)).cast("long").alias("df")))
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
     new_idf = merged_df.crossJoin(
         F.broadcast(new_stats.select("n_docs"))
     ).select(
-        "term", "df",
-        F.floor(
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            )
-            * IDF_SCALE
-        ).cast("long").alias("idf_q"),
+        "term", "df", _idf_q(F.col("n_docs"), F.col("df")).alias("idf_q")
     )
     inc.withColumn(
         "term_bucket",
@@ -607,21 +568,17 @@ def add_to_text_index(spark: SparkSession, path: str, docs: DataFrame,
         ).parquet(f"{path}/{t}")
 
 
-def text_index_topk(index: TextIndex, terms: Sequence[str],
-                    k: int = 20) -> DataFrame:
-    """BM25 top-k against the persisted index — :func:`bm25_topk`
-    semantics with nothing recomputed: the postings scan is pruned to
-    the query terms' hash buckets (≤ |terms| of 64 directories), the
-    queried terms' IDF rows broadcast, and the 1-row stats cross-join.
-    At any corpus size the scan is bounded by the queried buckets.
-    Returns (doc_id, score_q, rank)."""
+def _term_postings(index: TextIndex, terms: Sequence[str]):
+    """(postings rows of ``terms``, the 1-column ``term`` table of the
+    distinct terms). A big index's scan is pruned to the terms' hash
+    buckets; a small (adaptively-bucketed) one is bounded by
+    construction, and there the bucket-id collect job costs more than
+    the pruning saves."""
     spark = index.postings.sparkSession
-    uniq = list(dict.fromkeys(terms))
-    qterms = spark.createDataFrame([(t,) for t in uniq], "term string")
+    qterms = spark.createDataFrame(
+        [(t,) for t in dict.fromkeys(terms)], "term string"
+    )
     nb = int(index.params.get("n_buckets", 64))
-    # a small (adaptively-bucketed) index is bounded by construction —
-    # the bucket-id collect job costs more than the pruning saves; big
-    # indexes keep the <= |terms|-of-n_buckets pruned scan
     pruned = index.postings
     if nb > 8:
         buckets = sorted(
@@ -630,31 +587,27 @@ def text_index_topk(index: TextIndex, terms: Sequence[str],
              .collect()}
         )
         pruned = pruned.where(F.col("term_bucket").isin(buckets))
-    scored = (
-        pruned
-        .join(F.broadcast(qterms), "term")
+    return pruned.join(F.broadcast(qterms), "term"), qterms
+
+
+def text_index_topk(index: TextIndex, terms: Sequence[str],
+                    k: int = 20) -> DataFrame:
+    """BM25 top-k against the persisted index — :func:`bm25_topk`
+    semantics with nothing recomputed: the postings scan is pruned to
+    the query terms' hash buckets (≤ |terms| of 64 directories), the
+    queried terms' IDF rows broadcast, and the 1-row stats cross-join.
+    At any corpus size the scan is bounded by the queried buckets.
+    Returns (doc_id, score_q, rank)."""
+    post, qterms = _term_postings(index, terms)
+    return _ranked(
+        post
         .join(F.broadcast(index.idf.join(F.broadcast(qterms), "term")),
               "term")
         .crossJoin(F.broadcast(index.stats.select("avgdl_x1000")))
-        .select(
-            "doc_id",
-            F.expr(
-                "(idf_q * 22 * tf * avgdl_x1000) div "
-                "(10 * avgdl_x1000 * tf + 3 * avgdl_x1000 + 9000 * dl)"
-            ).cast("long").alias("contrib"),
-        )
+        .select("doc_id", _term_score("idf_q", "tf").alias("contrib"))
         .groupBy("doc_id")
-        .agg(F.sum("contrib").cast("long").alias("score_q"))
-        .orderBy(F.col("score_q").desc(), F.col("doc_id"))
-        .limit(k)
-    )
-    return scored.select(
-        "doc_id",
-        "score_q",
-        F.row_number()
-        .over(Window.orderBy(F.col("score_q").desc(), F.col("doc_id")))
-        .cast("long")
-        .alias("rank"),
+        .agg(F.sum("contrib").cast("long").alias("score_q")),
+        k,
     )
 
 
@@ -674,22 +627,7 @@ def text_index_phrase(index: TextIndex, phrase, k: int = 20) -> DataFrame:
             "phrase queries need positional postings"
         )
     terms = _phrase_terms(phrase)
-    spark = index.postings.sparkSession
-    uniq = list(dict.fromkeys(terms))
-    qterms = spark.createDataFrame([(t,) for t in uniq], "term string")
-    nb = int(index.params.get("n_buckets", 64))
-    pruned = index.postings
-    if nb > 8:  # same small-index dispatch as text_index_topk
-        buckets = sorted(
-            {r.b for r in
-             qterms.select(_bucket(F.col("term"), nb).alias("b"))
-             .collect()}
-        )
-        pruned = pruned.where(F.col("term_bucket").isin(buckets))
-    post = (
-        pruned
-        .join(F.broadcast(qterms), "term")
-    )
+    post, _ = _term_postings(index, terms)
     # Round 6: coverage is PER-DOC LOCAL once the pruned postings are
     # grouped by doc — one doc_id exchange feeding an Arrow kernel that
     # intersects the offset-shifted position sets (the anchor-coverage
@@ -731,35 +669,10 @@ def text_index_phrase(index: TextIndex, phrase, k: int = 20) -> DataFrame:
             })
 
     pp = rows.mapInPandas(_pp, f"doc_id {id_t}, dl long, ptf long")
-    idf = pp.agg(F.count(F.lit(1)).cast("long").alias("df")).crossJoin(
+    stats = pp.agg(F.count(F.lit(1)).cast("long").alias("df_ptf")).crossJoin(
         F.broadcast(index.stats.select("n_docs", "avgdl_x1000"))
-    ).select(
-        F.floor(
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            )
-            * IDF_SCALE
-        ).cast("long").alias("idf_q"),
-        "avgdl_x1000",
     )
-    scored = (
-        pp.crossJoin(F.broadcast(idf))
-        .select(
-            "doc_id", "ptf",
-            F.expr(_PHRASE_SCORE).cast("long").alias("score_q"),
-        )
-        .orderBy(F.col("score_q").desc(), F.col("doc_id"))
-        .limit(k)
-    )
-    return scored.select(
-        "doc_id", "ptf", "score_q",
-        F.row_number()
-        .over(Window.orderBy(F.col("score_q").desc(), F.col("doc_id")))
-        .cast("long")
-        .alias("rank"),
-    )
+    return _rank_docs(pp, ["ptf"], k, keep=["ptf"], stats=stats)
 
 
 def compact_text_index(spark: SparkSession, path: str) -> dict:

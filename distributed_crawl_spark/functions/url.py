@@ -19,10 +19,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Blocked download extensions — utils.py:50-52 (reference filter_urls).
-BLOCKED_EXTENSIONS = [
-    ".pdf", ".doc", ".docx", ".xls", ".xlsx",
-    ".zip", ".rar", ".exe", ".dmg", ".pkg",
-]
 _BLOCKED_EXT_RE = r"\.(pdf|doc|docx|xls|xlsx|zip|rar|exe|dmg|pkg)$"
 
 # Geo-block trigger phrases — hybrid_crawler.py:59-68 (verbatim, lowercased

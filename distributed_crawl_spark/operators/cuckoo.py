@@ -89,18 +89,19 @@ class CuckooSeenFilter:
 
     def _insert_np(self, table: np.ndarray, fp: np.ndarray, i1: np.ndarray,
                    n_prev: int) -> None:
-        """Batch insert, vectorized.
+        """Batch insert, vectorized. A multiset insert: every key stores
+        its own fingerprint copy, even when an equal (fp, bucket) pair is
+        already stored, so deleting one of two colliding keys leaves the
+        other present. Callers insert each URL once (new URLs only).
 
         Round-based scatter for the no-collision fast path: each round
-        (a) drops keys already present in either bucket (idempotence, and
-        how batch duplicates resolve), (b) picks each key's first bucket
-        with a free slot, (c) places ONE key per distinct target bucket
-        (first occurrence wins; numpy scatter would otherwise lose
-        conflicting writes) and requeues the rest. Placements only fill
-        slots, so a key whose both buckets are full can never become
-        placeable — those route straight to the per-key kick-chain loop,
-        the only remaining Python loop, sized by residue (rare below ~85%
-        load), not batch."""
+        (a) picks each key's first bucket with a free slot, (b) places
+        ONE key per distinct target bucket (first occurrence wins; numpy
+        scatter would otherwise lose conflicting writes) and requeues the
+        rest. Placements only fill slots, so a key whose both buckets are
+        full can never become placeable — those route straight to the
+        per-key kick-chain loop, the only remaining Python loop, sized by
+        residue (rare below ~85% load), not batch."""
         m = self.m_buckets
         tbl = table.reshape(m, SLOTS)
         fp = fp.astype(np.uint64)
@@ -111,12 +112,6 @@ class CuckooSeenFilter:
             pf = fp[pending]
             p1 = i1[pending]
             p2 = self._alt(p1, pf)
-            f16 = pf.astype(np.uint16)[:, None]
-            present = (tbl[p1] == f16).any(axis=1) | (tbl[p2] == f16).any(axis=1)
-            keep = ~present
-            pending, pf, p1, p2 = pending[keep], pf[keep], p1[keep], p2[keep]
-            if not len(pending):
-                break
             free1 = (tbl[p1] == 0).any(axis=1)
             free2 = (tbl[p2] == 0).any(axis=1)
             can = free1 | free2
@@ -137,10 +132,6 @@ class CuckooSeenFilter:
         kick_seed = n_prev
         for k in kickers:
             cur, b = np.uint16(fp[k]), int(i1[k])
-            # the key may have become present via a batch duplicate
-            j = int(self._alt(np.array([b]), np.array([cur], dtype=np.uint64))[0])
-            if (tbl[b] == cur).any() or (tbl[j] == cur).any():
-                continue
             for _kick in range(MAX_KICKS):
                 kick_seed = (kick_seed * 6364136223846793005 + 1442695040888963407) % (1 << 64)
                 slot = kick_seed % SLOTS

@@ -54,17 +54,6 @@ def _delay(rp: robotparser.RobotFileParser | None) -> float | None:
     return float(d) if d is not None else None
 
 
-@pandas_udf(BooleanType())
-def robots_allowed_udf(url: pd.Series, robots_txt: pd.Series) -> pd.Series:
-    def allowed(u: str, txt) -> bool:
-        rp = parsed_robots(txt)
-        return rp is None or rp.can_fetch(USER_AGENT, u)
-
-    return pd.Series(
-        [allowed(u, t) for u, t in zip(url, robots_txt)], dtype=bool
-    )
-
-
 @pandas_udf(DoubleType())
 def robots_crawl_delay_udf(robots_txt: pd.Series) -> pd.Series:
     """Crawl-delay seconds for USER_AGENT, NULL when unspecified."""
@@ -354,8 +343,9 @@ def robots_audit(fetched: DataFrame, robots: DataFrame,
     number — anything above it means a gate bypass (a retry path that
     skipped the gate, a stale robots cache, an alias host) and names
     exactly where. The post-hoc twin of :func:`gate_verdicts` (which
-    filters BEFORE fetching); both read :func:`parsed_robots`, so the
-    audit disagrees with the gate only when the log really did.
+    filters BEFORE fetching); both take the ``ok`` field of
+    :func:`robots_verdict_udf`, so the audit disagrees with the gate
+    only when the log really did.
 
     Output per host: n_fetched, n_denied, denied_bp (floor basis
     points), example_denied (min denied URL, NULL when clean), ordered
@@ -363,7 +353,7 @@ def robots_audit(fetched: DataFrame, robots: DataFrame,
 
     Scale: one broadcast join vs the (host, robots_txt) table (same
     broadcast the gate already pays; pass ``broadcast_robots=False``
-    for a giant robots corpus), the Arrow-batched robotparser UDF, and
+    for a giant robots corpus), the gate's Arrow-batched verdict UDF, and
     one |hosts|-bounded census. Reference analog: the reference checks
     robots per-request at fetch time (crawler.py); an audit over the
     stored log has no analog there — engine extension.
@@ -376,7 +366,8 @@ def robots_audit(fetched: DataFrame, robots: DataFrame,
                        F.col(url_col).alias("url"))
         .join(r, "host", "left")
         .withColumn(
-            "__ok", robots_allowed_udf(F.col("url"), F.col("robots_txt"))
+            "__ok",
+            robots_verdict_udf(F.col("url"), F.col("robots_txt"))["ok"],
         )
     )
     return (

@@ -107,6 +107,20 @@ def _seen_events(frontier_like: DataFrame, status: str, round_no: int) -> DataFr
     )
 
 
+def _latest_events(url_seen: DataFrame) -> DataFrame:
+    """(url, w): ``w`` is each URL's latest url_seen event. Later rounds
+    outrank earlier ones; within a round, a higher attempt wins, and
+    terminal events (completed/failed/robots_denied) outrank pending."""
+    rank = F.when(F.col("status") == "pending", 0).otherwise(1)
+    return url_seen.groupBy("url").agg(
+        F.max_by(
+            F.struct("status", "level", "attempt", "parent_url", "seq",
+                     "discovered_round"),
+            F.struct("discovered_round", F.col("attempt"), rank.alias("rank")),
+        ).alias("w")
+    )
+
+
 @dataclass
 class RoundStats:
     round: int
@@ -698,16 +712,7 @@ class CrawlDriver:
         spark = self.spark
         current = self._next_round()
         url_seen = self.store.read(spark, "url_seen")
-        rank = F.when(F.col("status") == "pending", 0).otherwise(1)
-        latest = url_seen.groupBy("url").agg(
-            F.max_by(
-                F.struct("status", "level", "parent_url", "seq",
-                         "discovered_round"),
-                F.struct("discovered_round", F.col("attempt"),
-                         rank.alias("rank")),
-            ).alias("w")
-        )
-        due = latest.filter(
+        due = _latest_events(url_seen).filter(
             (F.col("w.status") == "completed")
             & (F.col("w.discovered_round") + ttl_rounds < current)
         ).select(
@@ -793,19 +798,8 @@ class CrawlDriver:
 
     def current_status(self, version: int | None = None) -> DataFrame:
         """Latest status per URL from the append-only event log."""
-        seen = self._table("url_seen", version)
-        # terminal events (completed/failed/robots_denied) outrank pending
-        # within the same round; later rounds outrank earlier ones.
-        rank = F.when(F.col("status") == "pending", 0).otherwise(1)
-        return (
-            seen.groupBy("url")
-            .agg(
-                F.max_by(
-                    F.struct("status", "level", "attempt", "parent_url", "seq"),
-                    F.struct("discovered_round", F.col("attempt"), rank.alias("rank")),
-                ).alias("w")
-            )
-            .select("url", "w.status", "w.level", "w.attempt", "w.parent_url", "w.seq")
+        return _latest_events(self._table("url_seen", version)).select(
+            "url", "w.status", "w.level", "w.attempt", "w.parent_url", "w.seq"
         )
 
     def results(self, version: int | None = None) -> DataFrame:

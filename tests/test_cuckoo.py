@@ -56,3 +56,20 @@ def test_cuckoo_drop_in_for_bloom_in_filter_unseen(spark):
     exact = {r.url for r in filter_unseen(cands, seen).collect()}
     got = {r.url for r in filter_unseen(cands, seen, cf, state).collect()}
     assert got == exact == {f"https://s.test/{i}" for i in range(300, 500)}
+
+
+def test_cuckoo_colliding_keys_each_own_a_copy():
+    """Two keys with equal (fingerprint, bucket) each store a copy, so
+    deleting one leaves the other present."""
+    import numpy as np
+
+    from distributed_crawl_spark.operators.cuckoo import SLOTS
+
+    cf = CuckooSeenFilter(n_partitions=1, m_buckets=1 << 4)
+    table = np.zeros(cf.m_buckets * SLOTS, dtype=np.uint16)
+    fp = np.array([7, 7], dtype=np.uint64)
+    i1 = np.array([3, 3], dtype=np.int64)
+    cf._insert_np(table, fp, i1, 0)
+    assert int((table == 7).sum()) == 2
+    assert cf._delete_np(table, fp[:1], i1[:1]) == 1
+    assert cf._contains_np(table, fp[:1], i1[:1]).all()

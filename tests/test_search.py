@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
 from distributed_crawl_spark.functions import search as S
 
 DOCS = [
@@ -108,6 +110,64 @@ def test_postings_tf_cap(spark):
     docs = spark.createDataFrame([(0, text)], ["doc_id", "text"])
     row = S.build_postings(docs).collect()[0]
     assert row.tf == S.TF_CAP and row.dl == S.TF_CAP + 50
+
+
+# The idf as a SQL string with DECIMAL 0.5 literals — the form bm25_topk
+# computed before all searches shared ``_idf_q``'s DOUBLE Column form.
+_IDF_DECIMAL_SQL = (
+    "CAST(floor(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)"
+    f" * {S.IDF_SCALE}) AS BIGINT)"
+)
+
+
+def test_idf_q_matches_decimal_sql_form(spark):
+    """``_idf_q`` gives the DECIMAL-literal SQL form's idf_q for df in
+    {1, 2, N/2, N-1, N}: every N up to 2,000, N = c * 10^j and
+    10^j +- 1 up to 10^10, and 2,000 seeded random N near 10^10."""
+    import random
+
+    rng = random.Random(0)
+    ns = {*range(1, 2001)}
+    ns |= {c * 10**j + d for j in range(1, 11) for c in (1, 2, 3, 5)
+           for d in (-1, 0, 1)}
+    ns |= {rng.randrange(10**10 - 10**8, 10**10 + 1) for _ in range(2000)}
+    pairs = sorted(
+        {(n, df) for n in ns if n <= 10**10
+         for df in (1, 2, n // 2, n - 1, n) if 1 <= df <= n}
+    )
+    got = spark.createDataFrame(pairs, "n_docs long, df long").select(
+        "n_docs", "df",
+        S._idf_q(F.col("n_docs"), F.col("df")).alias("got"),
+        F.expr(_IDF_DECIMAL_SQL).alias("want"),
+    )
+    bad = got.filter(F.col("got") != F.col("want")).limit(5).collect()
+    assert bad == []
+    assert got.count() == len(pairs)
+
+
+def test_term_score_exact_at_overflow_bound(spark):
+    """The integer term score at the docstring's overflow bound (N =
+    10^10, df = 1, tf = TF_CAP, avgdl up to 40k milli-tokens) equals
+    Python's unbounded ints, for short and very long documents."""
+    idf_q = spark.range(1).select(
+        S._idf_q(F.lit(10**10), F.lit(1)).alias("i")
+    ).first().i
+    assert idf_q * 22 * S.TF_CAP * 40_000 < 2**63
+    rows = [(idf_q, tf, dl, a)
+            for tf in (1, S.TF_CAP)
+            for dl in (1, 40, 10**6, 10**9)
+            for a in (1_000, 40_000)]
+    got = spark.createDataFrame(
+        rows, "idf_q long, tf long, dl long, avgdl_x1000 long"
+    ).select(
+        "idf_q", "tf", "dl", "avgdl_x1000",
+        S._term_score("idf_q", "tf").alias("s"),
+    ).collect()
+    want = {
+        (i, tf, dl, a): (i * 22 * tf * a) // (10 * a * tf + 3 * a + 9000 * dl)
+        for i, tf, dl, a in rows
+    }
+    assert {tuple(r[:4]): r.s for r in got} == want
 
 
 def test_text_index_round_trip(spark, tmp_path):
