@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import (LOCAL_ROWS, doc_shingles, md5_int48, rows_if_small,
-                    shingles, tokens)
+from .dedup import (LOCAL_ROWS, _blocked_self_join, _posting_pairs,
+                    doc_shingles, md5_int48, rows_if_small, shingles, tokens)
 from .textstats import char_count, quality_score_int, word_count
 
 SPLIT_BUCKETS = 10_000
@@ -598,15 +598,16 @@ def span_scrub(docs: DataFrame, w: int = 20, min_docs: int = 2,
     )
 
 
-def winnow_anchors(h: Column, s: int) -> Column:
-    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken 2003,
-    "local algorithms for document fingerprinting") over a STAGED array
-    of gram digests: select every gram position whose digest is the
-    minimum of at least one window of ``s`` consecutive gram positions.
-    Returns ``array<struct<pos:int, digest:string>>`` with 0-based
-    token positions.
+def _winnow_anchor_rows(docs: DataFrame, k: int, s: int, id_col: str,
+                        text_col: str) -> DataFrame:
+    """(__doc, __pos, __dig) winnowed-anchor occurrence rows: winnowing
+    fingerprint selection (Schleimer/Wilkerson/Aiken 2003, "local
+    algorithms for document fingerprinting") over the md5 digests of
+    each doc's word ``k``-grams — every gram position whose digest is
+    the minimum of at least one window of ``s`` consecutive gram
+    positions, with 0-based token positions.
 
-    Why content-defined selection and not a fixed position grid: two
+    Why content-defined anchors and not a fixed position grid: two
     copies of the same passage sit at DIFFERENT offsets in their
     documents, so grams sampled at positions 0, s, 2s… of each document
     are misaligned between the copies and never collide — exactly the
@@ -617,85 +618,21 @@ def winnow_anchors(h: Column, s: int) -> Column:
     contains a selected gram, hence every repeated span of
     ``>= k + s - 1`` tokens shares at least one anchor across copies
     (it contains a full selection window lying inside the repeat in
-    both copies).
+    both copies). Selection keeps ALL positions achieving a window
+    minimum (the standard rightmost-tie rule needs positional state;
+    keeping every minimum is equally content-local, so the cross-copy
+    guarantee is unchanged).
 
-    Selection keeps ALL positions achieving a window minimum (the
-    standard rightmost-tie rule needs positional state; keeping every
-    minimum is equally content-local, so the cross-copy guarantee is
-    unchanged and the expression stays a pure HOF). Position ``i`` is a
-    window minimum iff its maximal runs of ``>=``-digest neighbours
-    left (``la``) and right (``ra``) satisfy ``la + ra + 1 >= s``
-    (some ``s``-window inside that run contains ``i``; conversely a
-    window witnessing ``i`` IS such a run) — O(s) comparisons per
-    position against the staged array, no per-window slice/min
-    allocations.
-
-    ``h`` MUST be a materialized column (see :func:`gram_digests` and
-    the staging in :func:`substring_spans`), not an inline expression
-    tree: interpreted higher-order functions re-evaluate every
-    reference to a non-attribute operand per lambda element, turning
-    an inline digest expression into an O(grams²·s) re-computation per
-    row — measured as ~3 s/doc on 75-word docs before staging
-    (BENCH.md round-5 substring section).
-    """
-    g = F.size(h)
-    sw = F.least(F.lit(s), g)  # short docs: one window over all grams
-
-    def run(i: Column, sign: int) -> Column:
-        lim = F.least(i, sw - 1) if sign < 0 else F.least(g - 1 - i, sw - 1)
-        viol = F.array_position(
-            F.transform(
-                F.sequence(F.lit(1), lim),
-                lambda e: F.element_at(h, i + F.lit(sign) * e + 1)
-                < F.element_at(h, i + 1),
-            ),
-            F.lit(True),
-        )
-        # array_position: 1-based first violation, 0 if none
-        return F.when(
-            lim >= 1, F.coalesce(F.nullif(viol, F.lit(0)) - 1, lim)
-        ).otherwise(F.lit(0))
-
-    selected = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), g - 1),
-            lambda i: F.struct(
-                i.cast("int").alias("pos"),
-                F.element_at(h, i + 1).alias("digest"),
-                (run(i, -1) + run(i, +1) + 1 >= sw).alias("sel"),
-            ),
-        ),
-        lambda st: st.sel,
-    )
-    empty = F.array().cast("array<struct<pos:int,digest:string>>")
-    return F.when(
-        g >= 1,
-        F.transform(selected, lambda st: F.struct(st.pos, st.digest)),
-    ).otherwise(empty)
-
-
-def gram_digests(toks: Column, k: int) -> Column:
-    """md5 digests of the word ``k``-grams of a STAGED token-array
-    column, in document order. Kept separate from :func:`winnow_anchors`
-    so each layer of the anchor computation is materialized once per
-    row (the staging contract described there)."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
-        lambda i: F.md5(F.array_join(F.slice(toks, i, k), " ")),
-    )
-    return F.when(F.size(toks) >= k, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _winnow_anchor_rows(docs: DataFrame, k: int, s: int, id_col: str,
-                        text_col: str) -> DataFrame:
-    """(__doc, __pos, __dig) winnowed-anchor occurrence rows — the Arrow
-    twin of ``explode(winnow_anchors(gram_digests(tokens(text))))``.
     Position ``i`` is selected iff its maximal runs of ``>=``-digest
-    neighbours left/right (each capped at ``min(s, g) - 1``) satisfy
-    ``la + ra + 1 >= min(s, g)`` — computed with vectorized shifted
-    string comparisons instead of per-element interpreted lambdas."""
+    neighbours left (``la``) and right (``ra``), each capped at
+    ``min(s, g) - 1``, satisfy ``la + ra + 1 >= min(s, g)`` (some
+    window inside that run contains ``i``; conversely a window
+    witnessing ``i`` IS such a run; a doc with ``g < s`` grams is one
+    window). The kernel computes the runs with vectorized shifted
+    string comparisons; tokens are :func:`~.dedup.java_ws_tokens`
+    (``tokens()``' bit-identical twin), digests are md5 of the
+    space-joined gram's UTF-8 bytes, and hex digests compare in ASCII
+    order, which equals Spark's UTF8_BINARY."""
     import hashlib
 
     import numpy as np
@@ -871,9 +808,10 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
     Plan shape for 100 TB (no suffix array — that doesn't distribute):
 
     1. **Anchor** (projection, no shuffle): winnowed ``k``-gram md5
-       anchors with ``k = w - s + 1`` (:func:`winnow_anchors`), so any
-       repeated span of ``>= k + s - 1 = w`` tokens shares an anchor
-       across copies; explode ships ~``grams/s`` slim rows.
+       anchors with ``k = w - s + 1`` (:func:`_winnow_anchor_rows`,
+       which states the winnowing guarantee), so any repeated span of
+       ``>= k + s - 1 = w`` tokens shares an anchor across copies;
+       explode ships ~``grams/s`` slim rows.
     2. **Census** (one uniform digest shuffle, map-side combinable):
        anchors occurring in ``>= min_docs`` distinct docs survive; at
        any corpus size the survivor set is the duplicated boilerplate
@@ -905,15 +843,8 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
     toks_t = docs.select(
         F.col(id_col).alias("__doc"), tokens(F.col(text_col)).alias("__toks")
     )
-    # Anchor stage as an Arrow kernel (round 6): gram digests + window-
-    # minimum selection were O(grams·s) interpreted higher-order
-    # comparisons per row — the dominant cost of the operator. The
-    # kernel replicates the JVM exactly: java_ws_tokens is tokens()'s
-    # bit-identical twin, digests are md5 of the space-joined k-gram's
-    # UTF-8 bytes, and the la/ra neighbour-run selection compares hex
-    # digest strings (ASCII, so Python's ordering equals UTF8_BINARY).
-    # The JVM winnow_anchors/gram_digests forms remain the documented
-    # reference (and the pytest oracle pins both to the same spans).
+    # the anchor stage is an Arrow kernel: as interpreted higher-order
+    # window comparisons (O(grams·s) per row) it dominated the operator
     anchors = _winnow_anchor_rows(docs, k, s, id_col, text_col)
     # small-anchor-stream fast path (same dispatch as the graph/pair
     # families): when the bounded probe holds the whole anchor stream
@@ -953,36 +884,21 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
     if max_df is not None:
         dup = dup.filter(F.col("__n_occ") <= max_df)
     occ = anchors.join(dup.select("__dig"), "__dig")
-    pairs = (
-        occ.select(
-            F.col("__dig"),
-            F.col("__doc").alias("__doc_a"),
-            F.col("__pos").alias("__pos_a"),
-        )
-        .join(
-            occ.select(
-                F.col("__dig"),
-                F.col("__doc").alias("__doc_b"),
-                F.col("__pos").alias("__pos_b"),
-            ),
-            "__dig",
-        )
-        .filter(F.col("__doc_a") < F.col("__doc_b"))
-        .drop("__dig")
-    )
+    pairs = _blocked_self_join(
+        occ, "__doc", ["__dig"], ["__pos"]).drop("__dig")
     # attach token arrays AFTER pairing so the digest shuffle stays slim
     both = (
         pairs.join(
             toks_t.select(
-                F.col("__doc").alias("__doc_a"), F.col("__toks").alias("__ta")
+                F.col("__doc").alias("id_a"), F.col("__toks").alias("__ta")
             ),
-            "__doc_a",
+            "id_a",
         )
         .join(
             toks_t.select(
-                F.col("__doc").alias("__doc_b"), F.col("__toks").alias("__tb")
+                F.col("__doc").alias("id_b"), F.col("__toks").alias("__tb")
             ),
-            "__doc_b",
+            "id_b",
         )
     )
     ta, tb = F.col("__ta"), F.col("__tb")
@@ -1012,21 +928,21 @@ def substring_spans(docs: DataFrame, w: int = 50, s: int = 16,
         lambda d: F.element_at(tb, pb + F.lit(k) + d),
     )
     ext = both.select(
-        F.col("__doc_a"),
-        F.col("__doc_b"),
+        F.col("id_a"),
+        F.col("id_b"),
         (pa - left).alias("__ba"),
         (pb - left).alias("__bb"),
         (F.lit(k) + left + right).cast("int").alias("__len"),
     ).filter(F.col("__len") >= w)
     spans = (
         ext.select(
-            F.col("__doc_a").alias(id_col),
+            F.col("id_a").alias(id_col),
             F.col("__ba").cast("int").alias("begin"),
             F.col("__len").alias("__len"),
         )
         .unionByName(
             ext.select(
-                F.col("__doc_b").alias(id_col),
+                F.col("id_b").alias(id_col),
                 F.col("__bb").cast("int").alias("begin"),
                 F.col("__len").alias("__len"),
             )
@@ -1523,7 +1439,8 @@ def source_similarity(docs: DataFrame, source_col: str = "source",
     ``collect_set(source)`` dedups map-side into a ≤|sources| array →
     per-source vocabulary sizes recovered from the same posting table
     (exchange reused) → pair enumeration as a pure array projection
-    (≤|sources|² structs per shingle) → intersection census bounded by
+    (≤|sources|² structs per shingle; :func:`~.dedup._posting_pairs`,
+    shared with ngram_jaccard) → intersection census bounded by
     |sources|² rows → broadcast joins against the tiny vocab table.
     No exchange after the shingle shuffle ever carries more than
     |shingles_distinct| × |sources| rows, at any corpus size.
@@ -1545,22 +1462,8 @@ def source_similarity(docs: DataFrame, source_col: str = "source",
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("srcs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("srcs"), i + 2, F.size(F.col("srcs"))),
-                lambda y: F.struct(x.alias("source_a"), y.alias("source_b")),
-            ),
-        )
-    )
-    inter = (
-        posts.filter(F.size("srcs") >= 2)
-        .select(F.explode(pair_arr).alias("p"))
-        .select("p.source_a", "p.source_b")
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
+    inter = _posting_pairs(posts.filter(F.size("srcs") >= 2), "srcs",
+                           "source_a", "source_b", "n_inter")
     va = vocab.select(F.col("source").alias("source_a"),
                       F.col("n_sh").alias("n_a"))
     vb = vocab.select(F.col("source").alias("source_b"),

@@ -354,6 +354,105 @@ def _local_pair_counts(ds: DataFrame, id_col: str,
     )
 
 
+# Candidate-pair enumeration — the one home of every near-dup pair join
+# (LCJoin's inverted-list candidate generation): posting lists pair their
+# members as an array projection, block keys pair rows by a self
+# equi-join, and the Hamming family builds its block keys by pigeonhole.
+
+
+def _posting_pairs(posts: DataFrame, members: str, a: str, b: str,
+                   count: str) -> DataFrame:
+    """Pair census of a posting-list table: every ``i < j`` pair of each
+    sorted ``members`` array, enumerated as a pure array projection
+    (``flatten(transform(slice))`` — no self-join, no exchange before
+    the census), then counted per pair. Ascending lists make ``a < b``
+    hold by construction. Returns (a, b, count), ``count`` being the
+    number of lists the pair shares."""
+    pair_arr = F.expr(
+        f"flatten(transform({members}, (x, i) -> transform("
+        f"slice({members}, i + 2, size({members})), "
+        f"y -> struct(x AS {a}, y AS {b}))))"
+    )
+    return (
+        posts.select(F.explode(pair_arr).alias("p"))
+        .select(f"p.{a}", f"p.{b}")
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias(count))
+    )
+
+
+def _blocked_self_join(rows: DataFrame, id_col: str, keys: list[str],
+                       carry: list[str] | tuple = ()) -> DataFrame:
+    """Candidate pairs of ``rows`` sharing every block key in ``keys`` —
+    an LSH band bucket, a pigeonhole block, a hyperplane bucket, an IVF
+    cell, a winnowed anchor — as one self equi-join per block, so pair
+    cost is the sum of squared block sizes, never all-pairs (no keys is
+    the all-pairs join). Each side renames ``id_col`` to ``id_a`` /
+    ``id_b`` and every ``carry`` column ``c`` to ``c_a`` / ``c_b``; only
+    ``id_a < id_b`` survives, so an unordered pair appears once per
+    shared block. Returns (*keys, id_a, *carry_a, id_b, *carry_b)."""
+    def side(s: str) -> DataFrame:
+        return rows.select(*keys, F.col(id_col).alias(f"id_{s}"),
+                           *[F.col(c).alias(f"{c}_{s}") for c in carry])
+
+    return (side("a").join(side("b"), keys or None)
+            .filter(F.col("id_a") < F.col("id_b")))
+
+
+def _hamming_pairs(fp: DataFrame, id_col: str, words: list[str], bits: int,
+                   max_hamming: int) -> DataFrame:
+    """Pigeonhole Hamming join (the Manku/WWW'07 web-dedup strategy)
+    over a fingerprint stored as ``words`` — columns of ``bits`` bits
+    each, lowest word first. A pair within hamming ``max_hamming`` must
+    agree EXACTLY on at least one of ``max_hamming + 1`` equal blocks,
+    so candidates come from the blocked self-join per (block_idx,
+    block_value) and only candidates pay the ``bit_count`` verify —
+    never all-pairs. Blocks must not straddle a word (the block width
+    divides ``bits``). A random corpus puts about N/2^width prints in a
+    bucket: 32-bit prints at max_hamming=3 give 8-bit blocks (N/256),
+    two 32-bit words give 16-bit blocks (N/65,536) — the 10^9+-item
+    form.
+
+    The fingerprint table (N × a few longs — tiny next to the corpus) is
+    PERSISTED (MEMORY_AND_DISK) before the self-join: both join sides
+    otherwise re-derive the fingerprint pass from the raw input,
+    measured 14s lazy vs 2.7s materialized at sf0.1.
+    Returns (id_a, id_b, hamming), id_a < id_b."""
+    blocks = max_hamming + 1
+    width = bits * len(words) // blocks
+    if width * blocks != bits * len(words) or bits % width:
+        raise ValueError(
+            f"max_hamming={max_hamming}: {len(words)}×{bits} fingerprint "
+            "bits must split into max_hamming+1 equal blocks that do not "
+            "straddle a word")
+    per_word = bits // width
+    mask = F.lit((1 << width) - 1)
+    # words keep the input's column order, so a projection that only
+    # drops columns adds no reordering stage to the persisted plan
+    fp = fp.select(id_col, *sorted(words, key=fp.columns.index)).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    vals = F.array(*[
+        F.shiftrightunsigned(F.col(words[b // per_word]),
+                             (b % per_word) * width).bitwiseAND(mask)
+        for b in range(blocks)
+    ])
+    tagged = fp.select(id_col, *words,
+                       F.posexplode(vals).alias("blk", "blk_val"))
+    carried = [f"{w}_{s}" for s in "ab" for w in words]
+    xor_bits = [F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b")))
+                for w in words]
+    hamming = sum(xor_bits[1:], xor_bits[0])
+    return (
+        _blocked_self_join(tagged, id_col, ["blk", "blk_val"], words)
+        # a pair can match on several blocks — count once
+        .groupBy("id_a", "id_b", *carried)
+        .agg(F.count(F.lit(1)).alias("n_blocks"))
+        .withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
                          n: int, max_df: int | None,
                          local_threshold: int = LOCAL_POSTING_ROWS
@@ -393,22 +492,7 @@ def _shingle_pair_counts(docs: DataFrame, id_col: str, text_col: str,
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_sh"))
     )
-    # pairs (docs[i], docs[j]) for i < j — ascending list ⇒ id_a < id_b
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    inter = (
-        posts.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = _posting_pairs(posts, "docs", "id_a", "id_b", "n_inter")
     ca = counts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return inter.join(ca, "id_a").join(cb, "id_b")
@@ -545,18 +629,18 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _band_key(b: int) -> Column:
-    """md5 over the band's r minhash values joined in hash-function order —
-    identical to hashing the (i, minhash)-sorted row form."""
-    return F.md5(
-        F.concat_ws(
-            ",",
-            *[
-                F.col(f"mh{b * LSH_ROWS + r}").cast("string")
-                for r in range(LSH_ROWS)
-            ],
-        )
-    )
+def _band_keys() -> Column:
+    """The signature's LSH_BANDS band keys as one array (posexplode it
+    into (band, key) rows): each key is md5 over the band's r minhash
+    values joined in hash-function order — identical to hashing the
+    (i, minhash)-sorted row form."""
+    return F.array(*[
+        F.md5(F.concat_ws(",", *[
+            F.col(f"mh{b * LSH_ROWS + r}").cast("string")
+            for r in range(LSH_ROWS)
+        ]))
+        for b in range(LSH_BANDS)
+    ])
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -574,15 +658,11 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     """
     cols = _minhash_cols(docs, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK)
-    keys = F.array(*[_band_key(b) for b in range(LSH_BANDS)])
     buckets = cols.select(
-        id_col, F.posexplode(keys).alias("band", "band_key")
+        id_col, F.posexplode(_band_keys()).alias("band", "band_key")
     )
-    a = buckets.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = buckets.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _blocked_self_join(buckets, id_col, ["band", "band_key"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -615,9 +695,8 @@ def dedup_index(corpus: DataFrame, id_col: str = "doc_id",
         F.md5(F.col(text_col)).alias("key"),
     ).distinct()
     cols = _minhash_cols(corpus, id_col, text_col, n)
-    keys = F.array(*[_band_key(b) for b in range(LSH_BANDS)])
     bands = (
-        cols.select(F.posexplode(keys).alias("band", "key"))
+        cols.select(F.posexplode(_band_keys()).alias("band", "key"))
         .distinct()
         .select(F.lit("band").alias("kind"), "band", "key")
     )
@@ -651,7 +730,6 @@ def incremental_dedup(new_docs: DataFrame, index: DataFrame,
     band_idx = index.filter(F.col("kind") == "band").select("band", "key")
     new_cols = _minhash_cols(new_docs, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK)
-    keys = F.array(*[_band_key(b) for b in range(LSH_BANDS)])
     exact_ids = (
         new_docs.select(id_col, F.md5(F.col(text_col)).alias("key"))
         .join(digest_idx, "key", "left_semi")
@@ -659,7 +737,8 @@ def incremental_dedup(new_docs: DataFrame, index: DataFrame,
         .withColumn("__e", F.lit(True))
     )
     near_ids = (
-        new_cols.select(id_col, F.posexplode(keys).alias("band", "key"))
+        new_cols.select(id_col,
+                        F.posexplode(_band_keys()).alias("band", "key"))
         .join(band_idx, ["band", "key"], "left_semi")
         .select(id_col)
         .distinct()
@@ -1012,123 +1091,33 @@ def hamming_pairs64(fp: DataFrame, id_col: str = "doc_id",
     """Hamming-ball pair join over ANY 64-bit two-half fingerprint table
     — :func:`simhash64` text prints, :func:`~distributed_crawl_spark.
     operators.multimodal.image_dhash` perceptual image prints, or any
-    future (hi, lo) fingerprint family.
-
-    Pigeonhole plan (the Manku/WWW'07 strategy; same as
-    :func:`simhash_pairs` over 32-bit prints): a pair within hamming
-    ``max_hamming`` must agree EXACTLY on ≥1 of ``max_hamming + 1``
-    equal blocks ⇒ candidates equi-join per (block_idx, block_value);
-    bit_count verifies. With max_hamming=3 the blocks are 16-bit →
-    65,536 buckets per block position: expected candidate-verify cost
-    O(N²/65536) on a random corpus — the difference between quadratic
-    blowup and output-bound at 10^9+ items. max_hamming=7 (8-bit
-    blocks) also divides evenly; blocks must not straddle the 32-bit
-    half boundary (width must divide 32).
-
-    The fingerprint table (N × 3 longs — tiny relative to the corpus)
-    is PERSISTED (MEMORY_AND_DISK) before the self-join: both join
-    sides otherwise re-derive the fingerprint pass from the raw input,
-    measured 14s lazy vs 2.7s materialized at sf0.1.
+    future (hi, lo) fingerprint family: the pigeonhole join
+    (:func:`_hamming_pairs`) over the two 32-bit words ``[lo, hi]``.
+    With max_hamming=3 the blocks are 16-bit → 65,536 buckets per block
+    position: expected candidate-verify cost O(N²/65536) on a random
+    corpus — the difference between quadratic blowup and output-bound
+    at 10^9+ items. max_hamming=1 (32-bit blocks, one per word) and
+    max_hamming=7 (8-bit blocks) also divide evenly; blocks must not
+    straddle the half boundary (width must divide 32).
     Returns (id_a, id_b, hamming), id_a < id_b.
     """
-    blocks = max_hamming + 1
-    assert 64 % blocks == 0, "64 bits must split into max_hamming+1 blocks"
-    width = 64 // blocks
-    assert 32 % width == 0, "blocks must not straddle the half boundary"
-    mask = F.lit((1 << width) - 1)
-    fp = fp.select(
-        id_col,
-        F.col(hi_col).alias("sh_hi"),
-        F.col(lo_col).alias("sh_lo"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    per_half = 32 // width
-    vals = F.array(
-        *[
-            F.shiftrightunsigned(
-                F.col("sh_hi") if b >= per_half else F.col("sh_lo"),
-                (b % per_half) * width,
-            ).bitwiseAND(mask)
-            for b in range(blocks)
-        ]
-    )
-    tagged = fp.select(
-        id_col, "sh_hi", "sh_lo", F.posexplode(vals).alias("blk", "blk_val")
-    )
-    a = tagged.select(
-        F.col(id_col).alias("id_a"), F.col("sh_hi").alias("hi_a"),
-        F.col("sh_lo").alias("lo_a"), "blk", "blk_val",
-    )
-    b = tagged.select(
-        F.col(id_col).alias("id_b"), F.col("sh_hi").alias("hi_b"),
-        F.col("sh_lo").alias("lo_b"), "blk", "blk_val",
-    )
-    hamming = F.bit_count(
-        F.col("hi_a").bitwiseXOR(F.col("hi_b"))
-    ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    return (
-        a.join(b, ["blk", "blk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # a pair can match on several blocks — count once
-        .groupBy("id_a", "id_b", "hi_a", "lo_a", "hi_b", "lo_b")
-        .agg(F.count(F.lit(1)).alias("n_blocks"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _hamming_pairs(fp, id_col, [lo_col, hi_col], 32, max_hamming)
 
 
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 32,
                   max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ max_hamming,
-    via pigeonhole blocking (the Manku/WWW'07 web-dedup strategy): split
-    the fingerprint into ``max_hamming + 1`` equal blocks — a pair inside
-    the hamming ball must agree EXACTLY on at least one block — so
-    candidates equi-join per (block_idx, block_value) and only candidates
-    pay the bit_count verify. Never all-pairs.
+    """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ max_hamming:
+    the pigeonhole join (:func:`_hamming_pairs`) over :func:`simhash`'s
+    one ``bits``-bit word, split into ``max_hamming + 1`` equal blocks.
 
     Scale note: with 32-bit prints and 8-bit blocks a block bucket holds
     ~N/256 docs; at 10^9+ docs use :func:`simhash_pairs64` (16-bit blocks
     → N/65536, same plan shape over the two-half fingerprint). Returns
     (id_a, id_b, hamming), id_a < id_b.
     """
-    blocks = max_hamming + 1
-    assert bits % blocks == 0, "bits must split into max_hamming+1 blocks"
-    width = bits // blocks
-    mask = F.lit((1 << width) - 1)
-    # persisted for the same reason as hamming_pairs64: both join
-    # sides otherwise recompute the fingerprint pass from raw text
-    fp = simhash(docs, id_col, text_col, bits).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    vals = F.array(
-        *[
-            F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(mask)
-            for b in range(blocks)
-        ]
-    )
-    tagged = fp.select(
-        id_col, "simhash", F.posexplode(vals).alias("blk", "blk_val")
-    )
-    a = tagged.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"),
-        "blk", "blk_val",
-    )
-    b = tagged.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"),
-        "blk", "blk_val",
-    )
-    return (
-        a.join(b, ["blk", "blk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # a pair can match on several blocks — count once
-        .groupBy("id_a", "id_b", "sh_a", "sh_b")
-        .agg(F.count(F.lit(1)).alias("n_blocks"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _hamming_pairs(simhash(docs, id_col, text_col, bits), id_col,
+                          ["simhash"], bits, max_hamming)
 
 
 def global_line_dedup(docs: DataFrame, id_col: str = "doc_id",
@@ -1334,8 +1323,8 @@ def mirror_detect(docs: DataFrame, host_col: str = "host",
     ``n_shared >= min_shared`` and ``share_bp >= min_share_bp`` are
     candidates, ordered by host pair.
 
-    Scale: the standard posting-list shape used by every pair operator
-    in this module — one digest shuffle, per-digest host lists bounded
+    Scale: the posting-list pair census (:func:`_posting_pairs`) shared
+    with ngram_jaccard — one digest shuffle, per-digest host lists bounded
     by ``max_df`` (template/boilerplate pages shared by more hosts than
     that are navigation noise, not mirror evidence — same documented
     knob as ngram_jaccard's), pair census bounded by |host pairs that
@@ -1356,20 +1345,7 @@ def mirror_detect(docs: DataFrame, host_col: str = "host",
         .agg(F.sort_array(F.collect_set("host")).alias("__hosts"))
         .filter((F.size("__hosts") >= 2) & (F.size("__hosts") <= max_df))
     )
-    pairs = (
-        hosts.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(__hosts, (a, i) -> "
-                    "transform(slice(__hosts, i + 2, size(__hosts)), "
-                    "b -> struct(a as host_a, b as host_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.host_a", "p.host_b")
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
+    pairs = _posting_pairs(hosts, "__hosts", "host_a", "host_b", "n_shared")
     ta = totals.select(F.col("host").alias("host_a"),
                        F.col("n_digests").alias("n_a"))
     tb = totals.select(F.col("host").alias("host_b"),

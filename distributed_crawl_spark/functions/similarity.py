@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .dedup import _blocked_self_join, near_dup_components
+
 N_PLANES = 8  # LSH hyperplanes → 256 buckets
 
 # Named (planes, tables) operating points, chosen from the measured
@@ -167,6 +169,17 @@ def _np_pq_codes(A: np.ndarray, CB: list[np.ndarray], d0: int) -> np.ndarray:
 def _cos_m(scale: int) -> Column:
     """Floor-scaled integer cosine (floor is hash-stable across engines)."""
     return F.floor(F.col("cos") * scale).cast("long").alias("cos_m")
+
+
+def _cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The embedding pair families' verify tail over a
+    :func:`~.dedup._blocked_self_join` that carried each side's vector
+    ``v`` and its hoisted norm ``v_n``: one dot product per candidate
+    pair (``dot/(v_n_a*v_n_b)`` is bit-identical to ``cosine(v_a,
+    v_b)``), keeping ``cos >= threshold``."""
+    return pairs.withColumn(
+        "cos", dot("v_a", "v_b") / (F.col("v_n_a") * F.col("v_n_b"))
+    ).filter(F.col("cos") >= threshold)
 
 
 def _top_k(scored: DataFrame, k: int, order: Column,
@@ -519,20 +532,12 @@ def embedding_near_dup_pairs(vectors: DataFrame, threshold: float = 0.4,
     exact form is O(n²) and exists for oracle checks and recall
     measurement only. Returns (id_a, id_b, cos).
     """
-    a = vectors.select(
-        F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("va")
-    ).withColumn("_na", norm("va"))
-    b = vectors.select(
-        F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("vb")
-    ).withColumn("_nb", norm("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        # hoisted norms — one dot per pair; bit-identical to cosine(va, vb)
-        .withColumn("cos", dot("va", "vb")
-                    / (F.col("_na") * F.col("_nb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", _cos_m(scale))
-    )
+    rows = vectors.select(
+        id_col, as_double(F.col(vec_col)).alias("v")
+    ).withColumn("v_n", norm("v"))
+    return _cosine_pairs(
+        _blocked_self_join(rows, id_col, [], ["v", "v_n"]), threshold
+    ).select("id_a", "id_b", _cos_m(scale))
 
 
 def embedding_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.4,
@@ -555,19 +560,11 @@ def embedding_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.4,
     (id_a, id_b, cos_m), id_a < id_b.
     """
     n_planes, n_tables = _lsh_params(preset, n_planes, n_tables)
-    a = _bucket_tagged(vectors, "id_a", "va", id_col, vec_col, dim,
-                       n_planes, n_tables)
-    b = _bucket_tagged(vectors, "id_b", "vb", id_col, vec_col, dim,
-                       n_planes, n_tables)
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # hoisted norms: one dot per candidate pair (see _bucket_tagged)
-        .withColumn(
-            "cos",
-            dot("va", "vb") / (F.col("va_n") * F.col("vb_n")),
-        )
-        .filter(F.col("cos") >= threshold)
+    tagged = _bucket_tagged(vectors, id_col, "v", id_col, vec_col, dim,
+                            n_planes, n_tables)
+    pairs = _cosine_pairs(
+        _blocked_self_join(tagged, id_col, ["tbl", "bucket"], ["v", "v_n"]),
+        threshold,
     )
     if n_tables > 1:
         pairs = pairs.groupBy("id_a", "id_b").agg(F.max("cos").alias("cos"))
@@ -592,8 +589,9 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
        map-side argmax, ONE N-row shuffle. ``centroids`` defaults to the
        seeded deterministic codebook (oracle-reproducible); hand in a
        :func:`kmeans_codebook` table when cluster quality matters.
-    2. **within-cell pairs** — equi-join on ``cell_id`` (assignment
-       persisted once, both join sides read it): pair cost is
+    2. **within-cell pairs** — the blocked self-join on ``cell_id``
+       (assignment persisted once, both join sides read it) and the
+       shared cosine tail (:func:`_cosine_pairs`): pair cost is
        Σ|cluster|², bounded by the quantizer's balance, the paper's own
        cost model. A giant cluster is AQE's skew case; raise
        ``n_cells`` to split it.
@@ -608,8 +606,6 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
     """
     from pyspark import StorageLevel
 
-    from .dedup import near_dup_components
-
     cents = (
         centroids
         if centroids is not None
@@ -619,24 +615,11 @@ def semdedup(vectors: DataFrame, n_cells: int = 32, threshold: float = 0.4,
     # vector at materialization, never per within-cell pair
     assigned = ivf_assign(
         vectors, cents, nprobe=1, id_col=id_col, vec_col=vec_col
-    ).withColumn("_n", norm("v")).persist(StorageLevel.MEMORY_AND_DISK)
-    a = assigned.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
-        F.col("_n").alias("_na"), "cell_id"
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("_n").alias("_nb"), "cell_id"
-    )
-    pairs = (
-        a.join(b, "cell_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # hoisted norms — one dot per pair; bit-identical to cosine(va, vb)
-        .withColumn("cos", dot("va", "vb")
-                    / (F.col("_na") * F.col("_nb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b")
-    )
+    ).withColumn("v_n", norm("v")).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = _cosine_pairs(
+        _blocked_self_join(assigned, "vec_id", ["cell_id"], ["v", "v_n"]),
+        threshold,
+    ).select("id_a", "id_b")
     comp = near_dup_components(pairs).withColumnRenamed("doc_id", "__cid")
     return (
         assigned.select("vec_id", "cell_id")

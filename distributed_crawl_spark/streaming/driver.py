@@ -255,6 +255,7 @@ class CrawlDriver:
         of newly enqueued URLs. On an empty checkpoint this is exactly
         ``start()``.
         """
+        self._check_seen_filter()
         meta = self.store.latest_meta()
         if meta is None:
             self.start(seeds)
@@ -312,19 +313,23 @@ class CrawlDriver:
         yields false negatives, and filter_unseen's definite-new branch
         would silently re-enqueue already-crawled URLs. On a format
         mismatch (old checkpoint, changed config), rebuild the filter from
-        the exact url_seen log and stamp the new format."""
-        if not self.bloom:
-            return
+        the exact url_seen log and stamp the new format. A driver without
+        a filter enqueues URLs without inserting them, so on finding a
+        format it stamps ``None`` (a commit with no table writes): the
+        bitmap no longer covers url_seen, and the next filtered run
+        rebuilds it."""
         meta = self.store.latest_meta()
-        if meta is None or meta.get("seen_filter_format") == self.bloom.format:
+        fmt = self.bloom.format if self.bloom else None
+        if meta is None or meta.get("seen_filter_format") == fmt:
             return
-        state = self.bloom.insert(
-            self.bloom.empty_state(self.spark),
-            self.store.read(self.spark, "url_seen").select("url").distinct(),
-        )
         staging = self.store.begin()
-        staging.write_replace("bloom_state", state)
-        staging.finalize({"seen_filter_format": self.bloom.format})
+        if self.bloom:
+            staging.write_replace("bloom_state", self.bloom.insert(
+                self.bloom.empty_state(self.spark),
+                self.store.read(self.spark, "url_seen").select("url")
+                .distinct(),
+            ))
+        staging.finalize({"seen_filter_format": fmt})
 
     def _next_round(self) -> int:
         meta = self.store.latest_meta()

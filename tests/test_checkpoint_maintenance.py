@@ -142,6 +142,56 @@ def test_seen_filter_rebuild_on_format_change(spark, tmp_path):
     assert dup == 0
 
 
+def test_seen_filter_rebuilt_after_rounds_without_one(spark, tmp_path):
+    """Rounds run without a seen filter enqueue URLs without inserting
+    them, so the bitmap no longer covers url_seen. The filterless driver
+    must clear the pointer's filter format, or the next filtered resume
+    trusts the stale bitmap and its definite-new branch re-enqueues the
+    URLs those rounds discovered (here ``d`` would be fetched twice)."""
+    from distributed_crawl_spark.schema import PAGES_SCHEMA, SEEDS_SCHEMA
+
+    links = {"a": ["b"], "b": ["c"], "c": ["d"], "d": ["c", "d"]}
+    pages = spark.createDataFrame(
+        [{"url": f"https://s.test/{p}", "warc_ts": None, "lang": "en",
+          "text": None,
+          "html": ("<html><body><p>page " + p + "</p>" + "".join(
+              f'<a href="https://s.test/{c}">x</a>' for c in cs)
+              + "</body></html>").encode()}
+         for p, cs in links.items()],
+        schema=PAGES_SCHEMA,
+    )
+    seeds = spark.createDataFrame(
+        [{"url": "https://s.test/a", "seq": 0, "unique_id": None}],
+        schema=SEEDS_SCHEMA,
+    )
+
+    def cfg(use_bloom, max_rounds):
+        return CrawlConfig(max_levels=10, max_rounds=max_rounds,
+                           use_bloom=use_bloom, compact_every=None)
+
+    ck = str(tmp_path / "ck")
+    bloom = CrawlDriver(spark, pages, None, cfg(True, 8), ck)
+    bloom.start(seeds)
+    bloom.run_round(0)
+    bloom.run_round(1)
+    CrawlDriver(spark, pages, None, cfg(False, 3), ck).resume()
+    assert bloom.store.latest_meta()["seen_filter_format"] is None
+    mixed = CrawlDriver(spark, pages, None, cfg(True, 8), ck)
+    mixed.resume()
+    assert mixed.store.latest_meta()["seen_filter_format"] == (
+        mixed.bloom.format)
+
+    full = CrawlDriver(spark, pages, None, cfg(True, 8),
+                       str(tmp_path / "full"))
+    full.run(seeds)
+
+    def fetches(drv):
+        return sorted(r.url for r in drv.fetch_log().filter("ok").collect())
+
+    assert fetches(mixed) == fetches(full) == [
+        f"https://s.test/{p}" for p in "abcd"]
+
+
 def test_time_travel_read_at(spark, tmp_path):
     """Iceberg VERSION-AS-OF analog: every finalized snapshot carries a
     per-version pointer copy, so read_at() reproduces any still-on-disk

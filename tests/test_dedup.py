@@ -202,10 +202,13 @@ def test_simhash64_matches_python(docs_df):
         assert 0 <= hi < 2 ** 32 and 0 <= lo < 2 ** 32
 
 
-def test_simhash_pairs64_pigeonhole_complete_and_verified(docs_df):
-    """64-bit blocked pair join (16-bit blocks) finds EVERY pair within
-    the hamming ball and nothing outside it — same guarantee as the
-    32-bit form, 256x more block buckets."""
+@pytest.mark.parametrize("max_hamming", [1, 3, 7])
+def test_simhash_pairs64_pigeonhole_complete_and_verified(docs_df,
+                                                          max_hamming):
+    """64-bit blocked pair join finds EVERY pair within the hamming ball
+    and nothing outside it, for each even block split of the two 32-bit
+    words: max_hamming=1 makes each block a whole word, 3 gives 16-bit
+    blocks (256x more buckets than the 32-bit form), 7 gives 8-bit."""
     fp = {r.doc_id: (r.sh_hi, r.sh_lo)
           for r in DD.simhash64(docs_df).collect()}
 
@@ -214,19 +217,20 @@ def test_simhash_pairs64_pigeonhole_complete_and_verified(docs_df):
         return bin(ha ^ hb).count("1") + bin(la ^ lb).count("1")
 
     want = {(a, b): ham(a, b) for a in fp for b in fp
-            if a < b and ham(a, b) <= 3}
+            if a < b and ham(a, b) <= max_hamming}
     got = {(r.id_a, r.id_b): r.hamming
-           for r in DD.simhash_pairs64(docs_df, max_hamming=3).collect()}
+           for r in DD.simhash_pairs64(docs_df,
+                                       max_hamming=max_hamming).collect()}
     assert got == want
     assert got.get((0, 3)) == 0  # exact dup at hamming 0
 
 
-def test_simhash_pairs64_eight_bit_blocks(docs_df):
-    """max_hamming=7 → 8 blocks of 8 bits — the other even split."""
-    out = DD.simhash_pairs64(docs_df, max_hamming=7).collect()
-    got = {(r.id_a, r.id_b): r.hamming for r in out}
-    assert got.get((0, 3)) == 0
-    assert all(h <= 7 for h in got.values())
+@pytest.mark.parametrize("max_hamming", [0, 4])
+def test_hamming_pairs64_rejects_uneven_blocks(docs_df, max_hamming):
+    """5 blocks do not divide 64 bits, and 1 block of 64 straddles the
+    two 32-bit words: both are refused before any plan is built."""
+    with pytest.raises(ValueError):
+        DD.hamming_pairs64(DD.simhash64(docs_df), max_hamming=max_hamming)
 
 
 def test_near_dup_components_matches_union_find(spark):

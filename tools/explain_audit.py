@@ -7,6 +7,10 @@ and flag anti-patterns (cartesian products, row-at-a-time Python UDFs,
 scans reading pruned-away columns).
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
+
+Naming queries audits only those and prints their table without
+rewriting PLANS.md, so two checkouts' plans can be compared query by
+query; only a full run writes PLANS.md.
 """
 
 from __future__ import annotations
@@ -210,7 +214,8 @@ def main() -> None:
         ))
         shown += 1
     out = "\n".join(lines) + "\n"
-    (REPO / "PLANS.md").write_text(out)
+    if not only:  # a subset run prints its table; PLANS.md stays whole
+        (REPO / "PLANS.md").write_text(out)
     print(out)
     bad = [
         r["name"]
